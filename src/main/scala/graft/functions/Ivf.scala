@@ -170,7 +170,11 @@ object Ivf {
             case ArrayType(DoubleType, _) => true
             case _ => false
           }))
-    if (!okTypes || elemCap <= 0 || nlist <= 0) return None
+    // The local mean update replicates the ANSI casts (it throws where they
+    // throw); with ANSI off the loop's casts yield NULLs that its sums skip
+    // instead, so only the loop is faithful there.
+    val ansi = finite.sparkSession.sessionState.conf.ansiEnabled
+    if (!okTypes || !ansi || elemCap <= 0 || nlist <= 0) return None
     // Dim probe (one LIMIT-1 job): the row cap must be derived BEFORE the
     // collect — a huge-dim corpus under a row-only cap would allocate
     // rowCap × dim unbounded heap before any post-hoc check could run.

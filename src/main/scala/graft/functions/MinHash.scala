@@ -142,10 +142,11 @@ object MinHash {
       // nothing, like the old inner join did. One semantic note: a
       // zero-token set now carries mask 0 instead of having NO mask row,
       // so an (empty, non-empty) candidate reaches the Jaccard filter
-      // (0, or 0/0→NaN) instead of being dropped by the old inner join —
-      // identical output for any threshold > 0 (EdgeCaseSpec pins the
-      // empty-token contract; thresholds ≤ 0 are out of contract, the
-      // S-curve is meaningless there).
+      // (Jaccard 0) and a pair of mask-0 sets the empty-union guard below,
+      // instead of being dropped by the old inner join — identical output
+      // for any threshold > 0 (EdgeCaseSpec pins the empty-token contract;
+      // thresholds ≤ 0 are out of contract, the S-curve is meaningless
+      // there).
       val vocabSorted = vocabRows.filter(_ != null).sortWith { (a, b) =>
         java.util.Arrays.compareUnsigned(
           a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -162,6 +163,11 @@ object MinHash {
       cand
         .join(broadcast(masks.select(col("rep").as("r1"), col("mask").as("m1"))), "r1")
         .join(broadcast(masks.select(col("rep").as("r2"), col("mask").as("m2"))), "r2")
+        // Two sets that both fold to mask 0 ([null] and [null, null]) share
+        // one signature, so they collide in every band; their 0/0 Jaccard
+        // (DIVIDE_BY_ZERO under ANSI) must never be computed (the cluster
+        // path's `uni > 0` guard).
+        .filter(expr("bit_count(m1 | m2) > 0"))
         .withColumn("jac",
           expr("bit_count(m1 & m2)").cast("double") / expr("bit_count(m1 | m2)"))
         .filter(col("jac") >= threshold)

@@ -35,13 +35,17 @@ object StreamingOps {
   /** A5 substitute: streaming replay of the event-log parquet.
     * FileStreamSource requires a DIRECTORY of files (it models an
     * append-only log dir, the file-system analogue of a Kafka topic), so the
-    * single test file is staged into a fresh temp dir via symlink. */
+    * single test file is staged into a fresh temp dir via symlink. The link
+    * and the dir are removed when the JVM exits (the link first: exit-time
+    * deletes run in reverse registration order); the returned stream reads
+    * them until then. */
   def fileReplay(spark: SparkSession, dir: String): DataFrame = {
     val raw = eventsRawSchema(spark, dir)
     val stage = java.nio.file.Files.createTempDirectory("graft-replay")
+    stage.toFile.deleteOnExit()
     java.nio.file.Files.createSymbolicLink(
       stage.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
+      java.nio.file.Paths.get(s"$dir/events.parquet")).toFile.deleteOnExit()
     // Shared conversion = the replay-equals-batch parity guarantee.
     graft.sources.Tables.normalizeEventTs(
       spark.readStream.schema(raw).parquet(stage.toString))
@@ -359,7 +363,23 @@ object StreamingOps {
     * the target's). The swap is crash-safe: current table moves ASIDE to
     * .bak (never deleted before the new data is in place), the new data
     * renames in, then the backup is dropped; a replayed batch after a crash
-    * finds either the table or the backup and merges against it. */
+    * finds either the table or the backup and merges against it.
+    *
+    * Cost per call, which runs on every micro-batch (no-data ones too):
+    *  - The stored table is read with the schema from ONE data file's
+    *    footer, read on the driver ([[storedSchema]]), so no schema
+    *    inference job runs. The stored schema, never `batch.schema`: the
+    *    union must still fail on any column mismatch instead of
+    *    null-filling a column the table lacks.
+    *  - The merge has exactly one exchange, sized from the stored table:
+    *    ceil(stored bytes / spark.sql.files.maxPartitionBytes) partitions
+    *    hashed on `keyCol`, which the window's clustering then reuses. The
+    *    rewrite's file count follows the table size, so a few hundred rows
+    *    make one file and a large table files of about one read split
+    *    each, rather than spark.sql.shuffle.partitions files of arbitrary
+    *    size (AQE, which would coalesce them, is off in the micro-batches
+    *    of a stateful query). The first write, with no stored table, keeps
+    *    the window's default partitioning. */
   def upsertBatch(batch: DataFrame, target: String, keyCol: String,
       versionCol: String, tiebreakCol: String): Unit = {
     import org.apache.spark.sql.expressions.Window
@@ -372,16 +392,23 @@ object StreamingOps {
     // Crash recovery: a previous run may have died between moving the table
     // aside and renaming the new version in — the backup is then the truth.
     val sourcePath =
-      if (fs.exists(dst)) Some(target)
-      else if (fs.exists(bak)) Some(target + ".bak")
+      if (fs.exists(dst)) Some(dst)
+      else if (fs.exists(bak)) Some(bak)
       else None
-    val existing = sourcePath
-      .map(spark.read.parquet(_))
-      .getOrElse(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], batch.schema))
+    val input = sourcePath match {
+      case Some(src) =>
+        val splitBytes = spark.sessionState.conf.filesMaxPartitionBytes
+        val bytes = fs.getContentSummary(src).getLength
+        val parts = math.max(1L, (bytes + splitBytes - 1) / splitBytes)
+          .min(Int.MaxValue).toInt
+        spark.read.schema(storedSchema(spark, fs, src)).parquet(src.toString)
+          .unionByName(batch)
+          .repartition(parts, col(keyCol))
+      case None => batch
+    }
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col(tiebreakCol).desc)
-    val merged = existing.unionByName(batch)
+    val merged = input
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
     merged.write.mode("overwrite").parquet(tmp.toString)
@@ -413,5 +440,28 @@ object StreamingOps {
         s"[upsertBatch] WARNING: swap succeeded but stale backup $bak " +
           "could not be deleted; remove it manually or the next crash " +
           "recovery may merge against stale data")
+  }
+
+  /** Schema of the parquet table at `dir`, converted from the footer of its
+    * first data file (`_`/`.`-prefixed files are metadata, markers or
+    * checksums) by Spark's own footer-to-schema path, which is what a
+    * non-merging `spark.read.parquet` infers from. Runs on the driver and
+    * reads only the footer: no Spark job. */
+  private def storedSchema(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dir: org.apache.hadoop.fs.Path): StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val file = fs.listStatus(dir).iterator.find { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.getOrElse(throw new java.io.IOException(
+      s"upsert: stored table $dir holds no data file"))
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+        file, spark.sparkContext.hadoopConfiguration),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 }

@@ -106,6 +106,20 @@ class EdgeCaseSpec extends AnyFunSuite {
     assert(pairs == Seq((1L, 2L)))
   }
 
+  test("nearDupPairs: two sets of only null tokens never pair") {
+    // [null] and [null, null] are distinct sets, both fold to bitmask 0
+    // (a null token sets no bit) and share one signature (a null token
+    // hashes to a per-seed constant), so they collide in every band; the
+    // confirm's Jaccard is 0/0 for them and must be dropped, not compared
+    // against the threshold.
+    val docs = Seq((1L, Seq[String](null)), (2L, Seq[String](null, null)),
+      (3L, Seq("a", "b")))
+      .toDF("doc_id", "toks")
+    val pairs = MinHash.nearDupPairs(docs, "doc_id", "toks", 16, 4, 0.5)
+      .select("d1", "d2").as[(Long, Long)].collect().toSeq
+    assert(pairs.isEmpty)
+  }
+
   test("simhashAgg: empty input returns an empty fingerprint relation") {
     val empty = Seq.empty[(Long, Seq[String])].toDF("id", "toks")
     assert(SimHash.simhashAgg(empty, "id", "toks").count() == 0L)

@@ -88,6 +88,19 @@ class IvfTrainSpec extends AnyFunSuite {
     bothPathsAgree(data.toDF("vec_id", "e"), nlist = 5, iters = 3, "random")
   }
 
+  test("ANSI off: driver path == loop path when a coordinate overflows the mean's decimal") {
+    // 1e15 does not fit DECIMAL(28,14). With ANSI on both paths throw;
+    // with it off the loop's cast yields NULL and its sums skip it, so the
+    // driver path must stand down rather than throw. Vector 3 joins
+    // vector 2's cluster, whose sums then still have a non-null term.
+    val vecs = Seq((1L, Seq(0.0, 0.0)), (2L, Seq(100.0, 100.0)),
+      (3L, Seq(1e15, 0.0)), (4L, Seq(1.0, 2.0))).toDF("vec_id", "e")
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try bothPathsAgree(vecs, nlist = 2, iters = 2, "ansi-off overflow")
+    finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
   test("driver fast path stays off for non-long ids (loop handles them)") {
     // Type gate: an int id must not take the collect path; both calls run
     // the loop and still agree (trivially) — the point is no crash and no

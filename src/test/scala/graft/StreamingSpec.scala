@@ -326,6 +326,81 @@ class StreamingSpec extends AnyFunSuite {
       "backup must be dropped after a successful swap")
   }
 
+  private def dataFiles(dir: String): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(path)
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith("."))
+      .toSeq
+  }
+
+  /** Merges each of `batches` into `target` as one micro-batch of a
+    * stateful stream, like the speed layer's: Spark runs a stateful
+    * query's micro-batches with AQE off, so nothing coalesces the merge's
+    * partitions. The stream's session copies the session's conf at start. */
+  private def upsertStream(target: String, batches: Seq[Seq[(Long, Long, Long)]]): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[(Long, Long, Long)]
+    val q = in.toDF().toDF("user_id", "event_id", "us").dropDuplicates().writeStream
+      .option("checkpointLocation", checkpoint())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        StreamingOps.upsertBatch(b, target, "user_id", "us", "event_id")
+      }
+      .start()
+    try batches.foreach { rows => in.addData(rows); q.processAllAvailable() }
+    finally q.stop()
+  }
+
+  test("A7/J10: upsert rewrites a table into ceil(bytes / maxPartitionBytes) files") {
+    val dir = Files.createTempDirectory("graft-serve-files").toString
+    // A few rows: the second merge reads a table far below one split, so
+    // it rewrites it as one file, not spark.sql.shuffle.partitions files.
+    val small = dir + "/small"
+    upsertStream(small, Seq(Seq((1L, 100L, 10L), (2L, 200L, 10L)),
+      Seq((2L, 201L, 20L), (3L, 300L, 20L))))
+    assert(dataFiles(small).size == 1)
+    assert(spark.read.parquet(small).select("user_id", "event_id")
+      .as[(Long, Long)].collect().toSet == Set((1L, 100L), (2L, 201L), (3L, 300L)))
+
+    // With the split size below the stored table's size, the rewrite is
+    // one file per split of it (4000 keys fill every hash partition).
+    val large = dir + "/large"
+    upsertStream(large, Seq((0L until 4000L).map(k => (k, k * 7, 10L))))
+    val bytes = dataFiles(large).map(_.getLen).sum
+    val split = bytes / 3 + 1
+    spark.conf.set("spark.sql.files.maxPartitionBytes", split.toString)
+    try upsertStream(large, Seq(Seq((5L, 1L, 20L))))
+    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    assert(dataFiles(large).size == 3) // ceil(bytes / split)
+    val served = spark.read.parquet(large)
+    assert(served.count() == 4000L)
+    assert(served.filter(col("user_id") === 5L).select("event_id")
+      .as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("A7/J10: upsert refuses a batch whose columns differ from the stored table") {
+    // The stored table's schema comes from its footer, never from the
+    // batch: a column only one side has must fail the merge, not be
+    // null-filled, and the served table must stay as it was.
+    val target = Files.createTempDirectory("graft-serve-schema").toString + "/users"
+    val stored = Set((1L, 100L, 10L), (2L, 200L, 10L))
+    StreamingOps.upsertBatch(stored.toSeq.toDF("user_id", "event_id", "us"),
+      target, "user_id", "us", "event_id")
+    val extra = Seq((2L, 201L, 20L, "x")).toDF("user_id", "event_id", "us", "extra")
+    val missing = Seq((3L, 300L)).toDF("user_id", "event_id")
+    val fs = new org.apache.hadoop.fs.Path(target)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for ((label, batch) <- Seq("extra column" -> extra, "missing column" -> missing)) {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        StreamingOps.upsertBatch(batch, target, "user_id", "us", "event_id")
+      }
+      val served = spark.read.parquet(target)
+      assert(served.columns.toSeq == Seq("user_id", "event_id", "us"), label)
+      assert(served.as[(Long, Long, Long)].collect().toSet == stored, label)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(target + ".bak")), label)
+    }
+  }
+
   /** Micros-since-epoch of the same UTC instant `ts` builds — derived
     * from it so the two can never disagree under a displaced host TZ.
     */

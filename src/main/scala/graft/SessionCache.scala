@@ -104,29 +104,19 @@ object SessionCache {
     }
   }
 
-  /** Drops every memoized value owned by `s`, keeping pins. Used by
-    * Bench's outlier retry: the committed band measured each query's
-    * first-touch work (q133's clustering build, q86's IVF training, table
-    * footer reads), so a retry riding the session cache would understate
-    * against the band — the opposite failure of the host noise the retry
-    * exists to remove. Pins are retained: they exist solely to keep
-    * already-executed plans' accumulators strongly reachable (see [[pin]]),
-    * and dropping them for a live session buys nothing except the r4
-    * log-ERROR race. */
+  /** Drops every memoized value owned by `s` — and only by `s` — keeping
+    * pins. Used by Bench's outlier retry: the committed band measured each
+    * query's first-touch work (q133's clustering build, q86's IVF training
+    * via Ivf.trainCached, table footer reads), so a retry riding the
+    * session cache would understate against the band — the opposite
+    * failure of the host noise the retry exists to remove. Pins are
+    * retained: they exist solely to keep already-executed plans'
+    * accumulators strongly reachable (see [[pin]]), and dropping them for a
+    * live session buys nothing except the r4 log-ERROR race. */
   def invalidateMemoized(s: SparkSession): Unit = {
     val sKey = sessionKey(s)
     map.keySet().removeIf(k => k._1 == sKey && !k._2.startsWith("pin:"))
-    // The IVF index memo lives in its own JVM-lifetime map (keyed by source
-    // dir, not session) — before r20 this doc promised "q86 trains IVF"
-    // first-touch semantics on retry but nothing cleared that map, so a
-    // retried q86/q94 (and every --fresh profiler rep after the first) rode
-    // the trained index and understated vs the band. Clearing is free of
-    // result risk: training is deterministic, a retrain is byte-identical.
-    graft.functions.Ivf.invalidateIndexCache()
   }
-
-  /** Visible for tests: current number of live entries. */
-  private[graft] def size: Int = map.size()
 
   /** Visible for tests: session keys currently holding entries. */
   private[graft] def sessionKeysForTest: Seq[String] = {
@@ -164,9 +154,10 @@ object SessionCache {
   }
 
   /** `df.localCheckpoint(eager = false)` with the originating plan pinned
-    * (see [[pin]]). Lazy by design: an eager checkpoint runs jobs at
-    * DataFrame CONSTRUCTION time, i.e. during schema/plan-only
-    * inspections. Every multi-consumer shared subplan in the engine
+    * (see [[pin]]). Only the result stage is deferred: under AQE the call
+    * runs every shuffle and broadcast stage of `df` at once, so checkpoint
+    * a frame only where some path reads it. Every multi-consumer shared
+    * subplan in the engine
     * (q78/q133's cluster relation, q122/q129, MinHash, SemanticDedup)
     * goes through here, each under its own site tag. */
   def lazyLocalCheckpoint(tag: String)(

@@ -27,51 +27,37 @@ object Components {
     * billion-vertex scale broadcasting labels is exactly wrong. */
   private val BroadcastLabelCap = 5000000L
 
-  /** Caps for the single-collect driver fast path (r19, optimization-guide
-    * §8 "decide with small rows"): a graph at or below these sizes is
-    * union-found on the driver in one collect + O(E α(V)) local work,
-    * replacing the loop's per-iteration driver planning (~0.3-0.5 s/round),
-    * label broadcasts and edge-frame shuffles — measured 2.7 s → ~0.3 s on
-    * q133's sf0.1 graph (3,935 vertices / 511,821 edges, 3 rounds). Heap
-    * math (r19 ADVICE #3, honest since the r20 primitive-encoder collect):
-    * an edge lands as one specialized Tuple2[Long, Long] (~32 B object +
-    * 8 B array slot), a vertex as an unboxed 8 B long plus ~48 B of
-    * LongMap/buffer bookkeeping — so 4M edges ≈ 160 MB and 2M vertices
-    * ≈ 110 MB of driver heap worst-case. [[driverComponents]] additionally
-    * bounds both collects by maxMemory/512 rows (≥10× slack over the ~40-56
-    * B/row real cost), so a default-1g driver self-limits to ~2M rows
-    * instead of OOMing at these constants. Beyond either cap (or non-long
-    * ids) the distributed loop below stands unchanged — at billion-edge
-    * scale collecting the graph is exactly wrong. */
-  private val DriverVertexCap = 2000000L
-  private val DriverEdgeCap = 4000000L
+  /** Worst-case driver heap per collected row of the single-collect fast
+    * path (r19, optimization-guide §8 "decide with small rows"), which
+    * [[graft.DriverCollect]] turns into row caps: an edge lands as one
+    * specialized Tuple2[Long, Long] (~32 B object + 8 B array slot), a
+    * vertex as an unboxed 8 B long plus ~48 B of LongMap/buffer
+    * bookkeeping. A graph within the budget is union-found on the driver in
+    * one collect per input + O(E α(V)) local work, replacing the loop's
+    * per-iteration driver planning (~0.3-0.5 s/round), label broadcasts and
+    * edge-frame shuffles — measured 2.7 s → ~0.3 s on q133's sf0.1 graph
+    * (3,935 vertices / 511,821 edges, 3 rounds). Beyond the budget (or
+    * non-long ids) the distributed loop below stands unchanged — at
+    * billion-edge scale collecting the graph is exactly wrong. */
+  private val VertexBytes = 56L
+  private val EdgeBytes = 40L
 
   /** vertices: (id) — one row per vertex; edges: (src, dst) undirected
-    * pairs. Returns (id, rep) with rep = min id in the component.
-    * `driverVertexCap`/`driverEdgeCap` exist for tests to force either
-    * path (0 = always the distributed loop); production call sites use
-    * the defaults. */
+    * pairs. Returns (id, rep) with rep = min id in the component. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int = 20, driverVertexCap: Long = DriverVertexCap,
-      driverEdgeCap: Long = DriverEdgeCap): DataFrame = {
-    driverComponents(vertices, edges, driverVertexCap, driverEdgeCap)
+      maxIter: Int = 20): DataFrame = {
+    driverComponents(vertices, edges)
       .getOrElse(loopComponents(vertices, edges, maxIter))
   }
 
-  /** Driver union-find over a bounded graph: one limit-guarded collect per
-    * input (the limit(cap+1) makes "too big" observable WITHOUT a separate
-    * count job — if the collect comes back over the cap, fall back to the
-    * loop; the wasted work is then one executeTake of ≤cap+1 rows per
-    * overflowing input, and the vertex overflow short-circuits BEFORE the
+  /** Driver union-find over a bounded graph: one [[graft.DriverCollect]]
+    * collect per input, each within the shared budget (an overflow wastes
+    * one budget of rows, and the vertex overflow short-circuits BEFORE the
     * edge collect so the expensive edge pipeline is never probed in that
     * case), path-compressed union-find with min-id roots, and a local
     * relation out (the caller broadcast-joins it, same as the loop's
     * result). Long ids only — the loop handles anything least()-comparable,
-    * so non-long schemas simply keep the old path. Collects go through
-    * primitive encoders (r19 ADVICE #3): unboxed longs / specialized
-    * tuples instead of GenericRows with boxed Longs, so the cap comment's
-    * heap arithmetic is the real cost, and a live maxMemory/512 row bound
-    * keeps small-heap drivers safe below the absolute caps.
+    * so non-long schemas simply keep the old path.
     *
     * UNDECLARED ("phantom") edge endpoints replicate the loop exactly
     * (r19 ADVICE #2 adjudicated the divergence; the loop semantics are the
@@ -85,24 +71,17 @@ object Components {
     * phantom minimum on the side, folded into each component's final min.
     * EdgeCaseSpec pins the transitive-phantom and smaller-phantom cases on
     * BOTH paths. */
-  private def driverComponents(vertices: DataFrame, edges: DataFrame,
-      vertexCap: Long, edgeCap: Long): Option[DataFrame] = {
+  private def driverComponents(vertices: DataFrame,
+      edges: DataFrame): Option[DataFrame] = {
     val longIds = vertices.schema.fields.headOption.exists(_.dataType == LongType) &&
       edges.schema.fields.forall(_.dataType == LongType)
-    if (!longIds || vertexCap <= 0 || edgeCap <= 0) return None
-    val heapRows = Runtime.getRuntime.maxMemory / 512
-    val vCap = math.min(vertexCap, heapRows)
-    val eCap = math.min(edgeCap, heapRows)
-    if (vCap <= 0 || eCap <= 0) return None
-    if (vCap > Int.MaxValue - 1 || eCap > Int.MaxValue - 1) return None
+    if (!longIds) return None
     val spark = vertices.sparkSession
     import spark.implicits._
-    val vs = vertices.select(col("id")).limit(vCap.toInt + 1)
-      .as[Long].collect()
-    if (vs.length > vCap) return None
-    val es = edges.select(col("src"), col("dst")).limit(eCap.toInt + 1)
-      .as[(Long, Long)].collect()
-    if (es.length > eCap) return None
+    val vs = graft.DriverCollect.collect(vertices.select(col("id")).as[Long],
+      VertexBytes).getOrElse(return None)
+    val es = graft.DriverCollect.collect(edges.select(col("src"), col("dst"))
+      .as[(Long, Long)], EdgeBytes).getOrElse(return None)
     val idx = new scala.collection.mutable.LongMap[Int](vs.length * 2)
     val ids = new scala.collection.mutable.ArrayBuffer[Long](vs.length)
     vs.foreach { id =>

@@ -65,28 +65,16 @@ object Ivf {
       (array_position(scores, array_min(scores)) - 1).cast("int")
     }
 
-  /** Session-lifetime index cache for trainCached. Trained centroids are a
-    * few KB (nlist × dim doubles); entries live for the JVM. */
-  private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String, Int, Int), Array[Array[Double]]]()
-
-  /** Drops every trained index. Part of the bench-retry invalidation
-    * contract ([[graft.SessionCache.invalidateMemoized]] documents that a
-    * retried q86 must pay first-touch training like the band run did) —
-    * before r20 the doc made that promise but nothing cleared THIS cache,
-    * so a retried q86/q94 rode the trained index and understated vs band.
-    * Global (the cache is keyed by source dir, not session): acceptable for
-    * the single-session Bench/profiler processes that call it; a cleared
-    * entry merely retrains, byte-identically (training is deterministic). */
-  def invalidateIndexCache(): Unit = indexCache.clear()
-
-  /** train(), memoized per (cacheKey, idCol, vecCol, nlist, iters) — the
-    * index-catalog pattern: a production vector store trains its IVF index
-    * once and every consumer (ANN search, semantic dedup, cluster
-    * analytics) reuses it, rather than re-running k-means per query.
-    * Callers pass the source directory as cacheKey; the test datasets are
-    * immutable per path, which is the documented cache-coherence contract
-    * (a mutable corpus would key on a snapshot/version id instead).
+  /** train(), memoized per session and (cacheKey, idCol, vecCol, nlist,
+    * iters) in [[graft.SessionCache]] — the index-catalog pattern: a
+    * production vector store trains its IVF index once and every consumer
+    * (ANN search, semantic dedup, cluster analytics) reuses it, rather than
+    * re-running k-means per query. Callers pass the source directory as
+    * cacheKey; the test datasets are immutable per path, which is the
+    * documented cache-coherence contract (a mutable corpus would key on a
+    * snapshot/version id instead). Session-scoped like every other memo, so
+    * [[graft.SessionCache.invalidateMemoized]] (a bench retry) drops this
+    * session's index and no other session's.
     * CALLER CONTRACT: the key does not see the DataFrame itself, so two
     * callers with the same (cacheKey, cols) must prepare vectors
     * IDENTICALLY — a caller that normalizes/truncates differently must use
@@ -94,8 +82,10 @@ object Ivf {
     * byte-identical to a retrain. */
   def trainCached(vecs: DataFrame, idCol: String, vecCol: String,
       nlist: Int, iters: Int, cacheKey: String): Array[Array[Double]] =
-    indexCache.computeIfAbsent((cacheKey, idCol, vecCol, nlist, iters),
-      _ => train(vecs, idCol, vecCol, nlist, iters))
+    graft.SessionCache.getOrBuild(vecs.sparkSession,
+      s"ivf-index:${(cacheKey, idCol, vecCol, nlist, iters)}") {
+      train(vecs, idCol, vecCol, nlist, iters)
+    }
 
   /** Deterministic k-means: init = nlist lowest-id vectors, `iters` rounds
     * of assign + decimal-exact mean update. vecs: (idCol, vecCol:
@@ -106,12 +96,10 @@ object Ivf {
     * inputs): a driver-local fast path for bounded training sets
     * ([[driverTrain]] — optimization-guide §8 "decide with small rows",
     * the Components.driverComponents pattern) and the distributed loop
-    * ([[loopTrain]]) beyond the caps or for non-(long, array<double>)
-    * schemas. `driverElemCap` exists for tests to force either path
-    * (0 = always the distributed loop). */
+    * ([[loopTrain]]) beyond [[graft.DriverCollect]]'s budget or for
+    * non-(long, array<double>) schemas. */
   def train(vecs: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int,
-      driverElemCap: Long = DriverTrainElemCap): Array[Array[Double]] = {
+      nlist: Int, iters: Int): Array[Array[Double]] = {
     graft.plans.VectorFunctions.register(vecs.sparkSession)
     // Train only on fully-finite vectors: a NaN/Inf coordinate would (a)
     // poison the decimal mean update (ANSI cast of NaN to decimal throws)
@@ -119,20 +107,15 @@ object Ivf {
     // at search time — dist2 coalesces their NaN distances to +Infinity.
     // isnan(v - v) is true exactly for NaN and ±Infinity.
     val finite = vecs.filter(forall(col(vecCol), v => !isnan(v - v)))
-    driverTrain(finite, idCol, vecCol, nlist, iters, driverElemCap)
+    driverTrain(finite, idCol, vecCol, nlist, iters)
       .getOrElse(loopTrain(finite, idCol, vecCol, nlist, iters))
   }
 
-  /** Element budget (rows × dim doubles) for the driver-local training fast
-    * path, bounding BOTH driver heap and driver compute: 4M doubles = 32 MB
-    * of primitive payload (collected via a primitive-array encoder, so no
-    * per-element boxing — the Components r19 ADVICE lesson applied from the
-    * start), and ≤4M exact-decimal mean additions per iteration (~0.5 s of
+  /** Compute cap of the driver-local training path, in rows × dim
+    * elements: ≤4M exact-decimal mean additions per iteration (~0.5 s of
     * local BigDecimal work worst-case — past that the distributed
-    * aggregation is genuinely better anyway). The effective row cap is
-    * additionally derived from the live driver heap in [[driverTrain]]
-    * (maxMemory/64 bytes), so a small-heap driver lowers it automatically
-    * rather than OOMing at the documented constant. */
+    * aggregation is genuinely better anyway). Heap is bounded separately,
+    * by [[graft.DriverCollect]]'s budget. */
   private val DriverTrainElemCap = 4000000L
 
   /** Driver-local replica of [[loopTrain]], byte-identical by construction:
@@ -152,15 +135,14 @@ object Ivf {
     * collect + persist) over a training set that is TINY by design — the
     * centroids themselves must fit on the driver either way, and the
     * assignment plan carries nlist×dim literals, so nlist/dim are bounded
-    * by plan size before they are bounded by these caps. One probe row +
-    * one limit-guarded collect replaces all of it. Beyond the caps (or for
-    * non-long ids / non-array<double> vectors) the distributed loop stands
-    * unchanged — at billion-vector scale collecting the training set is
-    * exactly wrong. Fallback cost when the collect overflows the cap: the
-    * probe + one executeTake of cap+1 rows, disclosed here like
-    * Components.driverComponents' probe. */
-  private def driverTrain(finite: DataFrame, idCol: String, vecCol: String,
-      nlist: Int, iters: Int, elemCap: Long): Option[Array[Array[Double]]] = {
+    * by plan size before they are bounded by the collect budget. A
+    * max(size(vec)) probe + one [[graft.DriverCollect]] collect replaces
+    * all of it; the row cap is sized by the LONGEST vector, not the first.
+    * Beyond the budget or [[DriverTrainElemCap]] (or for non-long ids /
+    * non-array<double> vectors) the distributed loop stands unchanged — at
+    * billion-vector scale collecting the training set is exactly wrong. */
+  private[graft] def driverTrain(finite: DataFrame, idCol: String,
+      vecCol: String, nlist: Int, iters: Int): Option[Array[Array[Double]]] = {
     import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, Decimal}
     val schema = finite.schema
     val okTypes =
@@ -174,25 +156,19 @@ object Ivf {
     // throw); with ANSI off the loop's casts yield NULLs that its sums skip
     // instead, so only the loop is faithful there.
     val ansi = finite.sparkSession.sessionState.conf.ansiEnabled
-    if (!okTypes || !ansi || elemCap <= 0 || nlist <= 0) return None
-    // Dim probe (one LIMIT-1 job): the row cap must be derived BEFORE the
-    // collect — a huge-dim corpus under a row-only cap would allocate
-    // rowCap × dim unbounded heap before any post-hoc check could run.
-    val probe = finite.select(col(vecCol)).limit(1).collect()
-    if (probe.isEmpty) return Some(Array.empty) // loopTrain on empty input
-    val dim = math.max(probe.head.getSeq[Double](0).length, 1)
-    val heapRows = Runtime.getRuntime.maxMemory / 64 / (dim.toLong * 8 + 64)
-    val rowCap = math.min(elemCap / dim, heapRows)
-    if (rowCap <= 0 || rowCap > Int.MaxValue - 1) return None
+    if (!okTypes || !ansi || nlist <= 0) return None
     val spark = finite.sparkSession
     import spark.implicits._
-    val rows = finite.select(col(idCol), col(vecCol))
-      .limit(rowCap.toInt + 1).as[(Long, Array[Double])].collect()
-    if (rows.length > rowCap) return None
-    // Heterogeneous-dim guard: the probe sized the cap from ONE row; if the
-    // actual payload exceeds the element budget (longer vectors later in
-    // the set), fall back rather than run an unbudgeted local loop.
-    if (rows.iterator.map(_._2.length.toLong).sum > elemCap) return None
+    // max(size(vec)) as an RDD fold: one job, where a global agg() adds a
+    // shuffle stage (a file scan's partitioning is unknown), i.e. a second
+    // job. Empty input folds to 0 and collects no rows, like the loop.
+    val dim = math.max(finite.select(size(col(vecCol))).as[Int].rdd
+      .fold(0)((a, b) => math.max(a, b)), 1)
+    // A row costs its doubles plus the array and tuple headers.
+    val rows = graft.DriverCollect.collect(
+      finite.select(col(idCol), col(vecCol)).as[(Long, Array[Double])],
+      rowBytes = dim * 8L + 64, computeCap = DriverTrainElemCap / dim)
+      .getOrElse(return None)
 
     // ---- init: distinct vectors (min owning id per NORMALIZED vector,
     // lowest ids first), exactly groupBy(vec).agg(min(id)).orderBy.limit ----

@@ -175,13 +175,16 @@ object MinHash {
     } else {
       // Open vocabulary: token arrays are too wide to broadcast blindly —
       // dedupe candidates first, then shuffle-join the set arrays in.
+      // Nulls dropped and empty unions skipped, as in the bitmask confirm,
+      // so the pairs do not depend on the vocabulary size.
       val candD = cand.distinct()
-      val t1 = sets.select(col("rep").as("r1"), col("toks").as("t1"))
-      val t2 = sets.select(col("rep").as("r2"), col("toks").as("t2"))
+      val t1 = sets.select(col("rep").as("r1"), array_compact(col("toks")).as("t1"))
+      val t2 = sets.select(col("rep").as("r2"), array_compact(col("toks")).as("t2"))
       candD.join(t1, "r1").join(t2, "r2")
+        .withColumn("uni", size(array_union(col("t1"), col("t2"))))
+        .filter(col("uni") > 0)
         .withColumn("jac",
-          size(array_intersect(col("t1"), col("t2"))).cast("double") /
-            size(array_union(col("t1"), col("t2"))))
+          size(array_intersect(col("t1"), col("t2"))).cast("double") / col("uni"))
         .filter(col("jac") >= threshold)
         .select("r1", "r2", "jac")
     }

@@ -36,12 +36,10 @@ object TextQueries {
   private def docToks(s: SparkSession, dir: String): DataFrame =
     docs(s, dir).select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
 
-  /** Exact Jaccard > 0.8 doc pairs via the distinct-set bitmask plan (q33);
-    * also the edge set for near-dup clustering (q78). Corpus vocabulary is
-    * tiny (31 words, FIXTURES.md) → one 64-bit mask; the single-partition
-    * window is safe on a ≤64-row vocab. */
-  /** (doc→mask assignments, set-level mask pairs with Jaccard > 0.8). */
-  private def maskPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  /** (doc_id, mask): each document's distinct-token bitmask, the input of
+    * q33's exact Jaccard > 0.8 pairs and of near-dup clustering (q78).
+    * Corpus vocabulary is tiny (31 words, FIXTURES.md) → one 64-bit mask. */
+  private def docMasks(s: SparkSession, dir: String): DataFrame = {
     // Vocabulary as ONE sorted array row (collect_set ⇒ two tiny agg
     // stages), then each doc's mask is a shuffle-free projection: fold the
     // doc's distinct tokens, OR-ing bit array_position-1. Byte-identical to
@@ -68,20 +66,23 @@ object TextQueries {
     val vocab = tok.agg(sort_array(collect_set(col("tok"))).as("vocab"))
       .filter(expr("ifnull(assert_true(size(vocab) <= 64, " +
         "'vocabulary exceeds 64 words: bitmask Jaccard invalid, use MinHash/LSH (q50)'), true)"))
-    val masks = docToks(s, dir).filter(size(col("toks")) > 0)
+    docToks(s, dir).filter(size(col("toks")) > 0)
       .crossJoin(broadcast(vocab))
       .select(col("doc_id"), expr(
         "aggregate(toks, CAST(0 AS BIGINT), (acc, t) -> " +
           "acc | shiftleft(CAST(1 AS BIGINT), " +
           "CAST(array_position(vocab, t) AS INT) - 1))").as("mask"))
+  }
+
+  /** (m1, m2, inter, uni): distinct-set mask pairs with Jaccard > 0.8. */
+  private def setPairs(masks: DataFrame): DataFrame = {
     val sets = masks.select("mask").distinct()
-    val pairs = sets.select(col("mask").as("m1"))
+    sets.select(col("mask").as("m1"))
       .crossJoin(sets.select(col("mask").as("m2")))
       .filter(col("m1") < col("m2"))
       .withColumn("inter", expr("bit_count(m1 & m2)"))
       .withColumn("uni", expr("bit_count(m1 | m2)"))
       .filter(col("inter") / col("uni") > 0.8)
-    (masks, pairs)
   }
 
   /** (doc_id, cluster_rep, cluster_size) — q78's cluster relation, factored
@@ -89,62 +90,66 @@ object TextQueries {
     * Clusters the distinct-SET graph (identical components, ~4x fewer
     * edges than the doc-expanded pair list), then maps docs through their
     * set's representative; set rep = min(doc_id), so the component rep is
-    * the min doc id of the whole cluster. Both inputs go through
-    * lazyLocalCheckpoint (lazy — eager would execute the crossJoin
-    * pipeline during schema-only inspections; pinned — see
-    * SessionCache.pin's accumulator-race note); the convergence loop's
-    * many actions then reuse the checkpoint instead of recomputing the
-    * pair pipeline. */
-  /** Session-lifetime cluster-relation cache via [[graft.SessionCache]]
-    * (the Ivf.trainCached pattern): q78 and q133 run the heaviest pipeline
-    * in this file; one lazily-checkpointed DataFrame per (session, dir)
-    * means the second consumer reuses the materialized clustering instead
-    * of re-running it. SessionCache owns the dead-session handling (stale
-    * frames from stopped sessions are swept on miss, never handed out). */
+    * the min doc id of the whole cluster. Memoized per (session, dir) via
+    * [[graft.SessionCache]] (the Ivf.trainCached pattern): q78 and q133 run
+    * the heaviest pipeline in this file, and one lazily-checkpointed
+    * DataFrame means the second consumer reuses the materialized
+    * clustering instead of re-running it. SessionCache owns the
+    * dead-session handling (stale frames from stopped sessions are swept
+    * on miss, never handed out). */
   private def dedupClusters(s: SparkSession, dir: String): DataFrame =
     graft.SessionCache.getOrBuild(s, s"dedup-clusters:$dir") {
       graft.SessionCache.lazyLocalCheckpoint(s"dedup-clusters:$dir")(
         dedupClustersUncached(s, dir))
     }
 
-  /** Distinct-set cap for the driver-local clustering fast path (r20,
+  /** Compute cap of the driver-local clustering fast path (r20,
     * optimization-guide §8 "decide with small rows" — the same pattern as
-    * Components.driverComponents and Ivf.driverTrain): at or below this
-    * many distinct token-set masks, the J>0.8 pair graph AND its connected
-    * components are computed on the driver from ONE (mask, srep) collect —
-    * 16 bytes/row, ≤256 KB at the cap — replacing the distributed
+    * Components.driverComponents and Ivf.driverTrain): within it, the J>0.8
+    * pair graph AND its connected components are computed on the driver
+    * from ONE (mask, srep) collect, replacing the distributed
     * crossJoin-pairs checkpoint, three setRep broadcast builds, and the
     * whole Components subgraph (the r19 profile: q133 = 20 Spark jobs,
-    * 1.5 task-seconds — job/planning-bound). The bound is COMPUTE, not
-    * memory: local all-pairs is n²/2 bitmask comparisons single-threaded
-    * (~150 M/s), so 16384 sets ≈ 1.3e8 comparisons ≈ 1 s worst-case —
-    * beyond that the 32-way codegen'd crossJoin wins and the distributed
-    * pipeline below stands unchanged (ScaleCheck's 10× corpus takes it).
-    * The distributed alternative is all-pairs over the SAME relation, so
-    * any corpus for which the old path was viable is within ~10× of this
-    * cap anyway. */
-  private val DriverSetCap = 16384
+    * 1.5 task-seconds — job/planning-bound). Heap is bounded by
+    * [[graft.DriverCollect]]'s budget at [[SetRowBytes]] a row; the binding
+    * cap is COMPUTE: local all-pairs is n²/2 bitmask comparisons
+    * single-threaded (~150 M/s), so 16384 sets ≈ 1.3e8 comparisons ≈ 1 s
+    * worst-case — beyond that the 32-way codegen'd crossJoin wins and the
+    * distributed pipeline below stands unchanged (ScaleCheck's 10× corpus
+    * takes it). The distributed alternative is all-pairs over the SAME
+    * relation, so any corpus for which the old path was viable is within
+    * ~10× of this cap anyway. */
+  private val DriverSetCap = 16384L
 
-  /** [[maskPairs]] with both frames lazily checkpointed and the PAIR
-    * (masks, pairs) memoized per (session, dir) — r20: q33 and the
-    * q78/q133 cluster relation consume the same mask derivation, and
-    * before this helper q33 alone re-planned the masks subtree FOUR times
-    * (once per inter join side, twice in the intra self-join — 12
-    * documents scans in one plan) while q33 and q78/q133 each paid their
-    * own build within a bench session. One checkpoint per (session, dir)
-    * now serves every consumer; SessionCache owns invalidation (bench
-    * retries) and dead-session sweeping. */
-  private def maskPairsCached(s: SparkSession, dir: String): (DataFrame, DataFrame) =
-    graft.SessionCache.getOrBuild(s, s"mask-pairs:$dir") {
-      val (masks0, pairs0) = maskPairs(s, dir)
-      (graft.SessionCache.lazyLocalCheckpoint(s"dedup-masks:$dir")(masks0),
-        graft.SessionCache.lazyLocalCheckpoint(s"dedup-pairs:$dir")(pairs0))
+  /** Heap of one collected (mask, srep) Tuple2[Long, Long] with its slot. */
+  private val SetRowBytes = 40L
+
+  /** [[docMasks]], lazily checkpointed and memoized per (session, dir) —
+    * r20: q33 and the q78/q133 cluster relation consume the same mask
+    * derivation, and before this helper q33 alone re-planned the masks
+    * subtree FOUR times (once per inter join side, twice in the intra
+    * self-join — 12 documents scans in one plan) while q33 and q78/q133
+    * each paid their own build within a bench session. SessionCache owns
+    * invalidation (bench retries) and dead-session sweeping. */
+  private def masksCached(s: SparkSession, dir: String): DataFrame =
+    graft.SessionCache.getOrBuild(s, s"dedup-masks:$dir") {
+      graft.SessionCache.lazyLocalCheckpoint(s"dedup-masks:$dir")(docMasks(s, dir))
     }
 
-  private[graft] def dedupClustersUncached(s: SparkSession, dir: String,
-      driverSetCap: Int = DriverSetCap): DataFrame = {
-    val (masks, pairs) = maskPairsCached(s, dir)
-    driverClusterRelation(masks, driverSetCap).getOrElse {
+  /** [[setPairs]] over the checkpointed masks, checkpointed and memoized
+    * the same way, built only by its readers (q33, the distributed cluster
+    * path): the checkpoint runs the crossJoin's shuffle stages at once
+    * ([[graft.SessionCache.lazyLocalCheckpoint]]). */
+  private def pairsCached(s: SparkSession, dir: String): DataFrame =
+    graft.SessionCache.getOrBuild(s, s"dedup-pairs:$dir") {
+      graft.SessionCache.lazyLocalCheckpoint(s"dedup-pairs:$dir")(
+        setPairs(masksCached(s, dir)))
+    }
+
+  private[graft] def dedupClustersUncached(s: SparkSession,
+      dir: String): DataFrame = {
+    val masks = masksCached(s, dir)
+    driverClusterRelation(masks).getOrElse {
       // setRep/comp are per-DISTINCT-SET relations. Explicit broadcast: their
       // inputs are checkpointed LogicalRDDs with unknown stats, so without the
       // hint each join plans as a sort-merge over the 511 k-row pair frame
@@ -156,7 +161,7 @@ object TextQueries {
       // (and the open-vocabulary answer is the MinHash path, q50).
       val setRep = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
       val docSet = masks.join(broadcast(setRep), "mask").select("doc_id", "srep")
-      val edges = pairs
+      val edges = pairsCached(s, dir)
         .join(broadcast(setRep.select(col("mask").as("m1"), col("srep").as("src"))), "m1")
         .join(broadcast(setRep.select(col("mask").as("m2"), col("srep").as("dst"))), "m2")
         .select("src", "dst")
@@ -179,18 +184,16 @@ object TextQueries {
     * union-find converges to the same fixpoint as Components'
     * least()-propagation (the ComponentsSpec equivalence argument, no
     * phantom endpoints possible since every edge endpoint is a collected
-    * srep). Returns None above the cap — the distributed pipeline is then
-    * the only execution, at the cost of this one re-aggregated
-    * limit-probe (an executeTake over the already-checkpointed masks
-    * frame, disclosed like Components.driverComponents' probe). */
-  private def driverClusterRelation(masks: DataFrame,
-      cap: Int): Option[DataFrame] = {
-    if (cap <= 0) return None
+    * srep). Returns None beyond [[graft.DriverCollect]]'s budget or
+    * [[DriverSetCap]] — the distributed pipeline is then the only
+    * execution, at the cost of this one re-aggregated limit-probe (an
+    * executeTake over the already-checkpointed masks frame). */
+  private def driverClusterRelation(masks: DataFrame): Option[DataFrame] = {
     val spark = masks.sparkSession
     import spark.implicits._
-    val sets = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
-      .limit(cap + 1).as[(Long, Long)].collect()
-    if (sets.length > cap) return None
+    val sets = graft.DriverCollect.collect(
+      masks.groupBy("mask").agg(min(col("doc_id")).as("srep")).as[(Long, Long)],
+      SetRowBytes, DriverSetCap).getOrElse(return None)
     val n = sets.length
     val parent = Array.tabulate(n)(identity)
     def find(x: Int): Int = {
@@ -234,8 +237,8 @@ object TextQueries {
   }
 
   private def exactNearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val (masks, pairs) = maskPairsCached(s, dir)
-    val inter = pairs
+    val masks = masksCached(s, dir)
+    val inter = pairsCached(s, dir)
       .join(masks.select(col("doc_id").as("da"), col("mask").as("m1")), "m1")
       .join(masks.select(col("doc_id").as("db"), col("mask").as("m2")), "m2")
       .select(least(col("da"), col("db")).as("d1"),

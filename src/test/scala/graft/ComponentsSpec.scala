@@ -45,20 +45,18 @@ class ComponentsSpec extends AnyFunSuite {
     (0 until n).map(v => v.toLong -> find(v).toLong).toMap
   }
 
-  /** Both execution paths, pinned against each other and the reference:
-    * the default caps route these tiny graphs through the r19 driver
-    * union-find; caps=0 forces the distributed min-label loop. */
-  private def ccOf(n: Int, edges: Seq[(Long, Long)],
-      forceLoop: Boolean = false): Map[Long, Long] = {
-    val verts = (0L until n.toLong).toDF("id")
-    val edf = if (edges.isEmpty)
-      Seq.empty[(Long, Long)].toDF("src", "dst")
-    else edges.toDF("src", "dst")
-    val cap = if (forceLoop) 0L else 2000000L
-    Components.connectedComponents(verts, edf,
-      driverVertexCap = cap, driverEdgeCap = cap)
-      .as[(Long, Long)].collect().toMap
-  }
+  /** Both execution paths (DriverPaths), pinned against each other by the
+    * callers and against the reference: the default budget routes these
+    * tiny graphs through the r19 driver union-find. */
+  private def ccOf(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] =
+    DriverPaths.bothAgree(s"n=$n edges=$edges") {
+      val verts = (0L until n.toLong).toDF("id")
+      val edf = if (edges.isEmpty)
+        Seq.empty[(Long, Long)].toDF("src", "dst")
+      else edges.toDF("src", "dst")
+      Components.connectedComponents(verts, edf)
+        .as[(Long, Long)].collect().toMap
+    }
 
   // Randomized insurance on the round-10 fixpoint-exit rewrite: the loop now
   // exits on the edge-violation certificate (round ≥1) or changed==0 (round
@@ -72,11 +70,8 @@ class ComponentsSpec extends AnyFunSuite {
       // Self-loops and duplicate/reversed edges on purpose — und unions both
       // directions and min-propagation must be idempotent under them.
       val edges = Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-      val want = ufComponents(n, edges)
-      assert(ccOf(n, edges) == want,
-        s"driver path, trial $trial (n=$n, m=$m, edges=$edges)")
-      assert(ccOf(n, edges, forceLoop = true) == want,
-        s"loop path, trial $trial (n=$n, m=$m, edges=$edges)")
+      assert(ccOf(n, edges) == ufComponents(n, edges),
+        s"trial $trial (n=$n, m=$m, edges=$edges)")
     }
   }
 
@@ -92,30 +87,25 @@ class ComponentsSpec extends AnyFunSuite {
     for (trial <- 1 to 5) {
       val n = 2 + rnd.nextInt(20)
       val m = 1 + rnd.nextInt(40)
-      val edges = Seq.fill(m)(
-        ((rnd.nextInt(3 * n) - n).toLong, (rnd.nextInt(3 * n) - n).toLong))
-      val driver = ccOf(n, edges)
-      val loop = ccOf(n, edges, forceLoop = true)
-      assert(driver == loop, s"trial $trial n=$n edges=$edges")
+      ccOf(n, Seq.fill(m)(
+        ((rnd.nextInt(3 * n) - n).toLong, (rnd.nextInt(3 * n) - n).toLong)))
     }
   }
 
   test("adversarial shapes: long path, cycle, star, edge-free round-0 exit") {
-    for (forceLoop <- Seq(false, true)) {
-      // Path 0-1-...-24: diameter 24 forces multiple certificate rounds and
-      // real pointer-jump contraction (labels converge in O(log diameter)).
-      val path = (0L until 24L).map(i => (i, i + 1))
-      assert(ccOf(25, path, forceLoop) == (0L until 25L).map(_ -> 0L).toMap)
-      // Cycle (closing edge makes min propagate both ways) + separate star.
-      val cycle = (0L until 9L).map(i => (i, i + 1)) :+ (9L, 0L)
-      val star = (11L to 15L).map(v => (10L, v))
-      val got = ccOf(16, cycle ++ star, forceLoop)
-      assert(got == ufComponents(16, cycle ++ star))
-      assert((0 to 9).forall(v => got(v.toLong) == 0L) &&
-        (10 to 15).forall(v => got(v.toLong) == 10L))
-      // Edge-free graph: round 0's changed==0 exit (certificate skipped).
-      assert(ccOf(7, Nil, forceLoop) == (0L until 7L).map(v => v -> v).toMap)
-    }
+    // Path 0-1-...-24: diameter 24 forces multiple certificate rounds and
+    // real pointer-jump contraction (labels converge in O(log diameter)).
+    val path = (0L until 24L).map(i => (i, i + 1))
+    assert(ccOf(25, path) == (0L until 25L).map(_ -> 0L).toMap)
+    // Cycle (closing edge makes min propagate both ways) + separate star.
+    val cycle = (0L until 9L).map(i => (i, i + 1)) :+ (9L, 0L)
+    val star = (11L to 15L).map(v => (10L, v))
+    val got = ccOf(16, cycle ++ star)
+    assert(got == ufComponents(16, cycle ++ star))
+    assert((0 to 9).forall(v => got(v.toLong) == 0L) &&
+      (10 to 15).forall(v => got(v.toLong) == 10L))
+    // Edge-free graph: round 0's changed==0 exit (certificate skipped).
+    assert(ccOf(7, Nil) == (0L until 7L).map(v => v -> v).toMap)
   }
 
   test("q133 dedup ROI accounting matches q78's cluster histogram") {

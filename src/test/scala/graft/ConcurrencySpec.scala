@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * harness path exercises (Verify/Bench/tests all run queries one at a
   * time): SessionCache's unlocked last-put-wins builds, the per-function
   * registration guards in VectorFunctions.register, Ivf.trainCached's
-  * computeIfAbsent, and lazyLocalCheckpoint pin replacement under
+  * SessionCache entry, and lazyLocalCheckpoint pin replacement under
   * overlapping constructions. A multi-tenant Spark application (one session
   * serving several request threads) is the production shape this models.
   */

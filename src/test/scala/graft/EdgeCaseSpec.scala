@@ -33,8 +33,8 @@ class EdgeCaseSpec extends AnyFunSuite {
     // edges naming vertices absent from the vertex relation are dropped by
     // the label join rather than conjuring phantom vertices — at scale a
     // pair list is routinely staler than the document snapshot it joins.
-    // Run under the default caps (driver union-find) AND caps=0 (the
-    // distributed loop): r19 ADVICE #1 — the contract must hold on both.
+    // Run on the driver union-find AND the distributed loop (DriverPaths):
+    // r19 ADVICE #1 — the contract must hold on both.
     val verts = (0L to 3L).toDF("id")
     val edges = Seq(
       (0L, 0L),   // self-loop
@@ -42,13 +42,10 @@ class EdgeCaseSpec extends AnyFunSuite {
       (3L, 99L),  // dangling dst
       (98L, 97L)) // both absent
       .toDF("src", "dst")
-    for (cap <- Seq(2000000L, 0L)) {
-      val comp = Components.connectedComponents(verts, edges,
-        driverVertexCap = cap, driverEdgeCap = cap)
-        .as[(Long, Long)].collect().toMap
-      assert(comp == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L),
-        s"cap=$cap")
+    val comp = DriverPaths.bothAgree("dangling") {
+      Components.connectedComponents(verts, edges).as[(Long, Long)].collect().toMap
     }
+    assert(comp == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 
   test("connectedComponents: phantom endpoints lower labels one hop, never bridge (both paths)") {
@@ -65,12 +62,10 @@ class EdgeCaseSpec extends AnyFunSuite {
       (5L, 6L),  // declared edge: 6 must inherit 5's phantom-lowered label
       (5L, 3L))  // smaller-id phantom: lowers {5,6}'s rep to 3
       .toDF("src", "dst")
-    for (cap <- Seq(2000000L, 0L)) {
-      val comp = Components.connectedComponents(verts, edges,
-        driverVertexCap = cap, driverEdgeCap = cap)
-        .as[(Long, Long)].collect().toMap
-      assert(comp == Map(5L -> 3L, 6L -> 3L, 7L -> 7L), s"cap=$cap: $comp")
+    val comp = DriverPaths.bothAgree("phantom") {
+      Components.connectedComponents(verts, edges).as[(Long, Long)].collect().toMap
     }
+    assert(comp == Map(5L -> 3L, 6L -> 3L, 7L -> 7L), s"$comp")
   }
 
   test("nearDupPairs: empty and single-doc corpora yield zero pairs") {
@@ -118,6 +113,22 @@ class EdgeCaseSpec extends AnyFunSuite {
     val pairs = MinHash.nearDupPairs(docs, "doc_id", "toks", 16, 4, 0.5)
       .select("d1", "d2").as[(Long, Long)].collect().toSeq
     assert(pairs.isEmpty)
+  }
+
+  test("nearDupPairs: null tokens pair the same at any vocabulary size") {
+    // The bitmask confirm (vocabulary ≤ 64 words) drops null tokens; the
+    // open-vocabulary confirm must too, or [null] vs [null, null] pairs with
+    // Jaccard 1.0 only once some unrelated document pushes the vocabulary
+    // past 64 words.
+    val docs = Seq((1L, Seq[String](null)), (2L, Seq[String](null, null)),
+      (3L, Seq("a", null)), (4L, Seq("a")), (5L, Seq("a", "b")))
+    val wide = (9L, (0 until 65).map(i => s"w$i"))
+    def pairs(d: Seq[(Long, Seq[String])]): Seq[(Long, Long, Double)] =
+      MinHash.nearDupPairs(d.toDF("doc_id", "toks"), "doc_id", "toks", 16, 4, 0.5)
+        .select("d1", "d2", "jac").as[(Long, Long, Double)].collect().toSeq.sorted
+    val bitmask = pairs(docs)
+    assert(!bitmask.exists(p => p._1 == 1L && p._2 == 2L))
+    assert(pairs(docs :+ wide) == bitmask)
   }
 
   test("simhashAgg: empty input returns an empty fingerprint relation") {

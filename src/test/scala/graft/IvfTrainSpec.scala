@@ -6,11 +6,10 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the r20 driver-local IVF training fast path to the distributed
-  * loop, BIT-exactly: `train(..., driverElemCap = 0)` forces the loop
-  * (the same cap-forcing contract as Components.connectedComponents), the
-  * default caps take the driver path on every input below, and the two
-  * must agree on every centroid coordinate's raw bits — the fast path is
-  * only legal because it is a semantic no-op. */
+  * loop, BIT-exactly (DriverPaths): the default budget takes the driver
+  * path on every input below, and the two must agree on every centroid
+  * coordinate's raw bits — the fast path is only legal because it is a
+  * semantic no-op. */
 class IvfTrainSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -19,13 +18,8 @@ class IvfTrainSpec extends AnyFunSuite {
     c.map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)).toSeq
 
   private def bothPathsAgree(vecs: DataFrame, nlist: Int, iters: Int,
-      label: String): Array[Array[Double]] = {
-    val driver = Ivf.train(vecs, "vec_id", "e", nlist, iters)
-    val loop = Ivf.train(vecs, "vec_id", "e", nlist, iters, driverElemCap = 0)
-    assert(bits(driver) == bits(loop),
-      s"$label: driver/loop centroid mismatch:\n driver=${driver.map(_.mkString(",")).mkString("\n  ")}\n loop=${loop.map(_.mkString(",")).mkString("\n  ")}")
-    driver
-  }
+      label: String): Seq[Seq[Long]] =
+    DriverPaths.bothAgree(label)(bits(Ivf.train(vecs, "vec_id", "e", nlist, iters)))
 
   private def fixtureVecs(dir: String): DataFrame = {
     graft.plans.VectorFunctions.register(spark)
@@ -99,6 +93,30 @@ class IvfTrainSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.ansi.enabled", "false")
     try bothPathsAgree(vecs, nlist = 2, iters = 2, "ansi-off overflow")
     finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
+  test("mixed dimensions: the row cap comes from the longest vector, not the first") {
+    // Row 0 (lowest id, so the first row a LIMIT-1 probe sees) has 2
+    // coordinates, the other 60 have 512. Budget B holds all 61 rows at 2
+    // doubles a row but only ~10 at 512, so a cap sized from row 0 would
+    // collect ~61 × 4 KB into a budget of ~40 KB. Row 0 is far from the
+    // rest, so it keeps a cluster of its own and training is well defined.
+    val rnd = new scala.util.Random(5L)
+    val vecs = ((0L, Seq(100.0, 100.0)) +: (1 to 60).map(i =>
+      (i.toLong, Seq.fill(512)(rnd.nextInt(7) - 3.0)))).toDF("vec_id", "e")
+    val perRow512 = 512 * 8L
+    DriverPaths.withBudget(10 * perRow512) {
+      assert(Ivf.driverTrain(vecs, "vec_id", "e", 2, 2).isEmpty,
+        "a budget for 10 long rows must refuse 60 of them")
+    }
+    // And the fallback trains exactly what the driver path trains when
+    // the budget does hold every row.
+    val fallback = DriverPaths.withBudget(10 * perRow512)(
+      bits(Ivf.train(vecs, "vec_id", "e", 2, 2)))
+    val driver = DriverPaths.withBudget(100 * perRow512) {
+      Ivf.driverTrain(vecs, "vec_id", "e", 2, 2).map(bits)
+    }
+    assert(driver.contains(fallback))
   }
 
   test("driver fast path stays off for non-long ids (loop handles them)") {

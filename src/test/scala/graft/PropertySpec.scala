@@ -186,7 +186,7 @@ class PropertySpec extends AnyFunSuite {
     val docToks = rows.zipWithIndex
       .map { case (ts, i) => (i.toLong, ts) }.toDF("doc_id", "toks0")
       .select(col("doc_id"), array_distinct(col("toks0")).as("toks"))
-    // New path — mirrors TextQueries.maskPairs exactly.
+    // New path — mirrors TextQueries.docMasks exactly.
     val tok = docToks.select(col("doc_id"), explode(col("toks")).as("tok"))
     val vocab = tok.agg(sort_array(collect_set(col("tok"))).as("vocab"))
     val masksNew = docToks.filter(size(col("toks")) > 0)
@@ -211,7 +211,7 @@ class PropertySpec extends AnyFunSuite {
 
   test("bitmask 65-word vocabulary tripwire fires through the real query path") {
     // shiftleft wraps mod 64, so a 65th word would silently alias bit 0 and
-    // corrupt every downstream Jaccard — maskPairs must fail loudly instead.
+    // corrupt every downstream Jaccard — docMasks must fail loudly instead.
     // Exercised end-to-end: a 65-distinct-word documents.parquet through the
     // declared q33 (not a replica of the expression).
     val spark = TestSpark.spark

@@ -80,6 +80,26 @@ class SessionCacheSpec extends AnyFunSuite {
     assert(SessionCache.pinCount === pinsBefore)
   }
 
+  test("invalidating one session keeps another session's trained IVF index") {
+    // A bench retry in session B must not make session A retrain.
+    def trained(s: org.apache.spark.sql.SparkSession): Array[Array[Double]] = {
+      graft.plans.VectorFunctions.register(s)
+      val v = Tables.read(s, TestSpark.sf0001, "embeddings")
+        .select(org.apache.spark.sql.functions.col("vec_id"),
+          org.apache.spark.sql.functions.expr(
+            "transform(embedding, x -> CAST(x AS DOUBLE))").as("e"))
+      graft.functions.Ivf.trainCached(v, "vec_id", "e", nlist = 8, iters = 3,
+        cacheKey = TestSpark.sf0001)
+    }
+    val a = spark.newSession()
+    val b = spark.newSession()
+    val indexA = trained(a)
+    trained(b)
+    SessionCache.invalidateMemoized(b)
+    val kept = trained(a) eq indexA
+    assert(kept, "session A's index must survive B's invalidation")
+  }
+
   test("pin replaces per (site, input) instead of accumulating per call") {
     import spark.implicits._
     def mk() = Seq(1L).toDF("x").filter($"x" > 0)

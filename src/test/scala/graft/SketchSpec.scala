@@ -263,7 +263,7 @@ class SketchSpec extends AnyFunSuite {
       .withColumn("nrm", expr("sqrt(graft_dot(e, e))"))
     val cents = Ivf.train(v, "vec_id", "e", nlist = 8, iters = 3)
     // Training determinism asserted on DIRECT train() calls: the q86/q94
-    // queries go through trainCached, whose JVM-lifetime memo would mask a
+    // queries go through trainCached, whose session memo would mask a
     // nondeterministic-training regression from any cache-hitting test.
     assert(cents.map(_.toSeq).toSeq ==
       Ivf.train(v, "vec_id", "e", nlist = 8, iters = 3).map(_.toSeq).toSeq,

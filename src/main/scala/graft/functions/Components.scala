@@ -88,29 +88,15 @@ object Components {
       if (!idx.contains(id)) { idx.put(id, ids.length); ids += id }
     }
     val nV = ids.length // output rows = declared vertices only
-    val parent = Array.tabulate(nV)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    val uf = new MinUnionFind(ids.toArray)
     // One-hop phantom minimum per declared vertex (the loop's round-0 raw
     // neighbor-min contribution from undeclared endpoints).
     val phanMin = Array.fill(nV)(Long.MaxValue)
     es.foreach { case (a, b) =>
       val ia = idx.getOrElse(a, -1)
       val ib = idx.getOrElse(b, -1)
-      if (ia >= 0 && ib >= 0) {
-        // Union with min-ID roots: the root's id IS the component minimum,
-        // the same invariant the loop's least()-propagation converges to.
-        val ra = find(ia)
-        val rb = find(ib)
-        if (ra != rb) {
-          if (ids(ra) < ids(rb)) parent(rb) = ra else parent(ra) = rb
-        }
-      } else if (ia >= 0) {
+      if (ia >= 0 && ib >= 0) uf.union(ia, ib)
+      else if (ia >= 0) {
         if (b < phanMin(ia)) phanMin(ia) = b
       } else if (ib >= 0) {
         if (a < phanMin(ib)) phanMin(ib) = a
@@ -122,7 +108,7 @@ object Components {
     val rootPhan = Array.fill(nV)(Long.MaxValue)
     var i = 0
     while (i < nV) {
-      val r = find(i)
+      val r = uf.find(i)
       if (phanMin(i) < rootPhan(r)) rootPhan(r) = phanMin(i)
       i += 1
     }
@@ -130,7 +116,7 @@ object Components {
       org.apache.spark.sql.types.StructField("id", LongType, nullable = false),
       org.apache.spark.sql.types.StructField("rep", LongType, nullable = false)))
     val out = (0 until nV).map { k =>
-      val r = find(k)
+      val r = uf.find(k)
       Row(ids(k), math.min(ids(r), rootPhan(r)))
     }
     Some(spark.createDataFrame(
@@ -138,21 +124,37 @@ object Components {
         .SeqHasAsJava(out).asJava), schema))
   }
 
+  /** Path-compressed union-find with min-key roots, so a root's key is its
+    * component's minimum — the fixpoint of the loop's least()-propagation.
+    * Shared by both driver fast paths (here and the dedup clusters). */
+  private[graft] final class MinUnionFind(keys: Array[Long]) {
+    private val parent = Array.tabulate(keys.length)(identity)
+
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) {
+        if (keys(ra) < keys(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+  }
+
   private def loopComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int): DataFrame = {
     // Materialize the (possibly expensive) edge pipeline ONCE — the loop
     // re-reads it every iteration.
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def seg[T](label: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      if (debug) System.err.println(
-        f"[cc] $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
     val und = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
-    seg("und materialize")(und.count())
+    und.count()
     // localCheckpoint per iteration truncates lineage AND the logical plan —
     // without it every iteration nests the previous plan and analysis time
     // grows exponentially (the classic iterative-DataFrame trap). Lazy
@@ -162,12 +164,11 @@ object Components {
       vertices.select(col("id"), col("id").as("rep")))
     // One count decides the join strategy for the whole loop: the label
     // table's row count is invariant (one row per vertex, every round).
-    val small = seg("labels init")(labels.count()) <= BroadcastLabelCap
+    val small = labels.count() <= BroadcastLabelCap
     def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val tIter = System.nanoTime()
       // Round 0 reads identity labels (rep ≡ id), so its neighbor-min needs
       // no label join at all: min(rep(dst)) ≡ min(dst). One broadcast join
       // fewer in the round-0 plan — driver plan construction is this loop's
@@ -183,8 +184,8 @@ object Components {
       // Checkpoint before the self-join below — step1 feeds BOTH sides of
       // the pointer jump, and without materialization the neighbor-min
       // join/aggregate subtree would execute twice per iteration. Lazy
-      // (pinned): the iteration's changed-count action materializes it and
-      // both pointer-jump sides read the persisted blocks (the MinHash
+      // (pinned): the round's action below materializes it and both
+      // pointer-jump sides read the persisted blocks (the MinHash
       // banded-frame pattern) — one job per iteration where the eager form
       // paid two. Round-9 measurement honesty: this did NOT move the q133
       // loop's wall time (still ~3.4 s at sf0.1) — the actions are ~0.1 s
@@ -203,58 +204,41 @@ object Components {
       val step0 = step1.join(side(reps), step1("rep") === col("rid"), "left")
         .select(step1("id"), step1("old_rep"),
           coalesce(col("rrep"), step1("rep")).as("rep"))
-      // Lazy, not eager: the FIRST consumer is the changed-count below,
-      // whose action both materializes the checkpoint and truncates
+      // Lazy, not eager: the FIRST consumer is the round's action below,
+      // which both materializes the checkpoint and truncates
       // lineage — one Spark job where the eager form paid two
       // (materialize, then count). Routed through the pinned helper so
       // the truncated plan's SQLMetric accumulators stay strongly
       // reachable (the r4 weak-ref accumulator race — SessionCache.pin).
       val step = graft.SessionCache.lazyLocalCheckpoint(s"cc-step-$i")(step0)
-      // Convergence certificate fused into the SAME action as the changed
-      // count (round-10, VERDICT r9 #3): a labeling is a fixpoint iff no
-      // edge joins two different reps. viol == 0 on the NEW labels implies
-      // every component's labels are constant (any violating edge (u,v)
-      // with rep(u) > rep(v) forces nbrMin(u) < rep(u), so no violations ⇒
-      // no next-round change; and component-constant labels satisfy
-      // rep(rep) = rep, so the jump is a no-op too). The loop therefore
-      // exits in the round that REACHES the fixpoint instead of running one
-      // more full round just to observe changed == 0 — 3 rounds instead of
-      // 4 on the sf0.1 dedup graph (changed = [2583, 1341, 6], viol hits 0
-      // alongside the 6) — at the cost of two broadcast joins against the
-      // cached edge frame inside the existing per-round action. `changed`
-      // is retained for the debug trace only. Round 0 skips the certificate:
-      // a freshly-seeded labeling is never a fixpoint on a non-trivial graph
-      // (and on an edge-free graph round 0's changed == 0 exit fires), so
-      // paying the certificate's edge scan there was pure waste — measured
-      // ~0.4 s of the round-0 action.
-      val t0 = System.nanoTime()
-      val (changed, violCnt) =
-        if (i == 0) {
-          val c = step.filter(col("rep") =!= col("old_rep")).count()
-          (c, if (c == 0) 0L else -1L)
-        } else {
+      // Convergence certificate (round-10, VERDICT r9 #3): a labeling is a
+      // fixpoint iff no edge joins two different reps. viol == 0 on the NEW
+      // labels implies every component's labels are constant (any violating
+      // edge (u,v) with rep(u) > rep(v) forces nbrMin(u) < rep(u), so no
+      // violations ⇒ no next-round change; and component-constant labels
+      // satisfy rep(rep) = rep, so the jump is a no-op too). The loop
+      // therefore exits in the round that REACHES the fixpoint instead of
+      // running one more full round just to observe no label change — 3
+      // rounds instead of 4 on the sf0.1 dedup graph — at the cost of two
+      // broadcast joins against the cached edge frame inside the round's
+      // one action, which also materializes `step`. Round 0 skips the
+      // certificate: a freshly-seeded labeling is never a fixpoint on a
+      // non-trivial graph (and on an edge-free graph round 0's no-change
+      // exit fires), so paying the certificate's edge scan there was pure
+      // waste — measured ~0.4 s of the round-0 action.
+      converged =
+        if (i == 0) step.filter(col("rep") =!= col("old_rep")).count() == 0L
+        else {
           val lab = step.select(col("id"), col("rep"))
-          val viol = und
+          und
             .join(side(lab.select(col("id").as("sid"), col("rep").as("srep"))),
               und("src") === col("sid"))
             .join(side(lab.select(col("id").as("did"), col("rep").as("drep"))),
               und("dst") === col("did"))
             .filter(col("srep") =!= col("drep"))
-          val row = step
-            .select((col("rep") =!= col("old_rep")).cast("long").as("c"),
-              lit(0L).as("v"))
-            .unionAll(viol.select(lit(0L).as("c"), lit(1L).as("v")))
-            .agg(coalesce(sum(col("c")), lit(0L)).as("c"),
-              coalesce(sum(col("v")), lit(0L)).as("v"))
-            .head()
-          (row.getLong(0), row.getLong(1))
+            .count() == 0L
         }
-      if (debug)
-        System.err.println(s"[cc] iter=$i changed=$changed viol=$violCnt " +
-          f"action=${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          f"iter_total=${(System.nanoTime() - tIter) / 1e9}%.2fs")
       labels = step.select("id", "rep")
-      converged = violCnt == 0L
       i += 1
     }
     und.unpersist()

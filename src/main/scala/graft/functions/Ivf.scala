@@ -136,8 +136,9 @@ object Ivf {
     * centroids themselves must fit on the driver either way, and the
     * assignment plan carries nlist×dim literals, so nlist/dim are bounded
     * by plan size before they are bounded by the collect budget. A
-    * max(size(vec)) probe + one [[graft.DriverCollect]] collect replaces
-    * all of it; the row cap is sized by the LONGEST vector, not the first.
+    * min/max(size(vec)) probe (which refuses mixed dimensions) + one
+    * [[graft.DriverCollect]] collect replaces all of it; the row cap is
+    * sized by the longest vector.
     * Beyond the budget or [[DriverTrainElemCap]] (or for non-long ids /
     * non-array<double> vectors) the distributed loop stands unchanged — at
     * billion-vector scale collecting the training set is exactly wrong. */
@@ -159,11 +160,15 @@ object Ivf {
     if (!okTypes || !ansi || nlist <= 0) return None
     val spark = finite.sparkSession
     import spark.implicits._
-    // max(size(vec)) as an RDD fold: one job, where a global agg() adds a
-    // shuffle stage (a file scan's partitioning is unknown), i.e. a second
-    // job. Empty input folds to 0 and collects no rows, like the loop.
-    val dim = math.max(finite.select(size(col(vecCol))).as[Int].rdd
-      .fold(0)((a, b) => math.max(a, b)), 1)
+    // min and max of size(vec) as one RDD fold: one job, where a global
+    // agg() adds a shuffle stage (a file scan's partitioning is unknown),
+    // i.e. a second job. Empty input folds to (MaxValue, 0) and collects no
+    // rows, like the loop.
+    val (shortest, longest) = finite.select(size(col(vecCol))).as[Int].rdd
+      .map(n => (n, n))
+      .fold((Int.MaxValue, 0))((a, b) => (math.min(a._1, b._1), math.max(a._2, b._2)))
+    requireOneDim(shortest, longest)
+    val dim = math.max(longest, 1)
     // A row costs its doubles plus the array and tuple headers.
     val rows = graft.DriverCollect.collect(
       finite.select(col(idCol), col(vecCol)).as[(Long, Array[Double])],
@@ -235,6 +240,12 @@ object Ivf {
     Some(centroids)
   }
 
+  /** Both training paths refuse finite vectors of differing lengths: the
+    * mean update would write past the end of a shorter centroid. */
+  private def requireOneDim(shortest: Int, longest: Int): Unit =
+    if (shortest < longest) throw new IllegalArgumentException("Ivf.train: " +
+      s"training vectors differ in length ($shortest to $longest coordinates)")
+
   /** [[centroidScore]]'s exact double arithmetic, locally: cc via the same
     * sequential fold, dot via graft_dot's loop (i < min length), then the
     * non-finite coalesce to +Infinity. */
@@ -268,11 +279,21 @@ object Ivf {
     // keep going — a throw mid-train must not leak the persisted training
     // set into the block manager for the rest of the JVM.
     try {
+      // The dimension check rides the init action as observed metrics: no
+      // extra job.
+      val dims = org.apache.spark.sql.Observation()
       var centroids: Array[Array[Double]] = finite
+        .observe(dims, min(size(col(vecCol))).as("shortest"),
+          max(size(col(vecCol))).as("longest"))
         .groupBy(col(vecCol)).agg(min(col(idCol)).as("__mid"))
         .orderBy(col("__mid")).limit(nlist)
         .select(vecCol).collect()
         .map(_.getSeq[Double](0).toArray)
+      val sizes = dims.get
+      (sizes.get("shortest"), sizes.get("longest")) match {
+        case (Some(lo: Int), Some(hi: Int)) => requireOneDim(lo, hi)
+        case _ => // empty input: no sizes, or null ones
+      }
       for (_ <- 0 until iters) {
         val assigned = finite.withColumn("__c", assignment(col(vecCol), centroids))
         val means = assigned

@@ -96,9 +96,10 @@ object MinHash {
     // Checkpoint the BANDED stage too: the candidate enumeration below
     // self-joins it, so without materialization the signature stage runs on
     // BOTH join sides. Since round 8 that stage is the fused codegen
-    // MinHashSignature expression (~0.57 s of q50's sf0.1 profile per
-    // ProfileQ50's pruning-proof toRdd timing — down from ~1.8 s when it
-    // was interpreted HOF folds), so the pin is no longer about dodging
+    // MinHashSignature expression (~0.57 s of q50's sf0.1 profile, timed
+    // through queryExecution.toRdd so the optimizer cannot prune the
+    // unconsumed signature column — down from ~1.8 s when it was
+    // interpreted HOF folds), so the pin is no longer about dodging
     // CodegenFallback; it still halves the stage by collapsing the two
     // join-side computations to one, and it keeps the double-compute from
     // returning if the signature ever gets more expensive again.

@@ -195,14 +195,9 @@ object TextQueries {
       masks.groupBy("mask").agg(min(col("doc_id")).as("srep")).as[(Long, Long)],
       SetRowBytes, DriverSetCap).getOrElse(return None)
     val n = sets.length
-    val parent = Array.tabulate(n)(identity)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
+    // min-SREP roots: the root's srep is the component minimum, the
+    // invariant Components' least()-propagation converges to.
+    val uf = new graft.functions.Components.MinUnionFind(sets.map(_._2))
     var i = 0
     while (i < n) {
       val (mi, _) = sets(i)
@@ -214,20 +209,12 @@ object TextQueries {
         // union-find is symmetric, so enumeration order is irrelevant).
         val inter = java.lang.Long.bitCount(mi & mj)
         val uni = java.lang.Long.bitCount(mi | mj)
-        if (uni > 0 && inter.toDouble / uni.toDouble > 0.8) {
-          val ra = find(i)
-          val rb = find(j)
-          if (ra != rb) {
-            // min-SREP roots: the root's srep is the component minimum,
-            // the invariant Components' least()-propagation converges to.
-            if (sets(ra)._2 < sets(rb)._2) parent(rb) = ra else parent(ra) = rb
-          }
-        }
+        if (uni > 0 && inter.toDouble / uni.toDouble > 0.8) uf.union(i, j)
         j += 1
       }
       i += 1
     }
-    val out = (0 until n).map(k => (sets(k)._1, sets(k)._2, sets(find(k))._2))
+    val out = (0 until n).map(k => (sets(k)._1, sets(k)._2, sets(uf.find(k))._2))
     val rel = broadcast(
       spark.createDataFrame(out).toDF("mask", "srep", "rep"))
     Some(masks.join(rel, "mask")

@@ -26,6 +26,6 @@ object ExplainDump {
       java.nio.file.Paths.get("/root/repo/EXPLAINS.md"), sb.toString)
     println(s"EXPLAINS.md written (${names.size} plans)")
     // No spark.stop(): TestSpark.spark is suite-shared; Test/runMain forks,
-    // so JVM exit cleans up (see ProfileQ130 for the rationale).
+    // so JVM exit cleans it up.
   }
 }

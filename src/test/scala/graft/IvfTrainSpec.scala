@@ -95,28 +95,33 @@ class IvfTrainSpec extends AnyFunSuite {
     finally spark.conf.set("spark.sql.ansi.enabled", prior)
   }
 
-  test("mixed dimensions: the row cap comes from the longest vector, not the first") {
-    // Row 0 (lowest id, so the first row a LIMIT-1 probe sees) has 2
-    // coordinates, the other 60 have 512. Budget B holds all 61 rows at 2
-    // doubles a row but only ~10 at 512, so a cap sized from row 0 would
-    // collect ~61 × 4 KB into a budget of ~40 KB. Row 0 is far from the
-    // rest, so it keeps a cluster of its own and training is well defined.
-    val rnd = new scala.util.Random(5L)
+  private def refusal(vecs: DataFrame): String =
+    intercept[IllegalArgumentException](
+      Ivf.train(vecs, "vec_id", "e", nlist = 1, iters = 1)).getMessage
+
+  test("mixed dimensions fail loud with one named error on both paths") {
+    // nlist 1 puts [1,1,1] in [1,1]'s cluster, where the mean update used
+    // to write past the end of the 2-dim centroid.
+    val pair = Seq((1L, Seq(1.0, 1.0)), (2L, Seq(1.0, 1.0, 1.0)))
+    val msg = DriverPaths.bothAgree("mixed dims")(refusal(pair.toDF("vec_id", "e")))
+    assert(msg.contains("differ in length (2 to 3 coordinates)"), msg)
+    // The zero budget still runs driverTrain's size probe; int ids and
+    // ANSI off skip the driver path and so reach loopTrain's check.
+    assert(refusal(pair.map { case (id, v) => (id.toInt, v) }.toDF("vec_id", "e")) == msg)
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try assert(refusal(pair.toDF("vec_id", "e")) == msg)
+    finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
+  test("mixed dimensions: refused by the size probe before any row is collected") {
+    // Row 0 (lowest id) has 2 coordinates, the other 60 have 512, and the
+    // budget holds ~10 rows of 512: the min/max size probe must refuse.
     val vecs = ((0L, Seq(100.0, 100.0)) +: (1 to 60).map(i =>
-      (i.toLong, Seq.fill(512)(rnd.nextInt(7) - 3.0)))).toDF("vec_id", "e")
-    val perRow512 = 512 * 8L
-    DriverPaths.withBudget(10 * perRow512) {
-      assert(Ivf.driverTrain(vecs, "vec_id", "e", 2, 2).isEmpty,
-        "a budget for 10 long rows must refuse 60 of them")
-    }
-    // And the fallback trains exactly what the driver path trains when
-    // the budget does hold every row.
-    val fallback = DriverPaths.withBudget(10 * perRow512)(
-      bits(Ivf.train(vecs, "vec_id", "e", 2, 2)))
-    val driver = DriverPaths.withBudget(100 * perRow512) {
-      Ivf.driverTrain(vecs, "vec_id", "e", 2, 2).map(bits)
-    }
-    assert(driver.contains(fallback))
+      (i.toLong, Seq.fill(512)(i % 7 - 3.0)))).toDF("vec_id", "e")
+    val e = intercept[IllegalArgumentException](DriverPaths.withBudget(10 * 512 * 8L)(
+      Ivf.driverTrain(vecs, "vec_id", "e", 2, 2)))
+    assert(e.getMessage.contains("(2 to 512 coordinates)"), e.getMessage)
   }
 
   test("driver fast path stays off for non-long ids (loop handles them)") {

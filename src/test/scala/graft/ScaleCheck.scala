@@ -123,6 +123,6 @@ object ScaleCheck {
       f"  pairs $pairs1%,d -> $pairs10%,d (${pairs10.toDouble / pairs1}%.1fx)" +
       f"  output rows $rows1%,d -> $rows10%,d (${rows10.toDouble / rows1}%.1fx)")
     // No spark.stop(): TestSpark.spark is suite-shared; Test/runMain forks,
-    // so JVM exit cleans up (see ProfileQ130 for the rationale).
+    // so JVM exit cleans it up.
   }
 }

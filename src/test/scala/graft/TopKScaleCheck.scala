@@ -56,6 +56,6 @@ object TopKScaleCheck {
       println(f"[topk] $d%-24s rows=$na%9d  graft_topk=$ta%6.2fs  window=$tw%6.2fs  speedup=${tw / ta}%4.1fx")
     }
     // No spark.stop(): TestSpark.spark is suite-shared; Test/runMain forks,
-    // so JVM exit cleans up (see ProfileQ130 for the rationale).
+    // so JVM exit cleans it up.
   }
 }

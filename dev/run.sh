@@ -2,9 +2,12 @@
 # Fast runner for graft mains without sbt startup overhead.
 #   dev/run.sh graft.Verify /root/testdata/sf0.01 /tmp/verify_out
 #   SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 dev/run.sh graft.Bench
-# Requires a prior `sbt compile`.
+#   dev/run.sh graft.UnicodeFixtureMain        # a src/test main
+# Requires a prior `sbt compile` (`sbt Test/compile` for the test-tree
+# mains, e.g. the axis fixture builders dev/axis_compare.sh starts).
 set -e
-CLASSES=/root/repo/target/scala-2.13/classes
+TARGET="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13"
+CLASSES="$TARGET/classes:$TARGET/test-classes"
 CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \

@@ -4,9 +4,8 @@ import scala.util.DynamicVariable
 
 import org.apache.spark.sql.Dataset
 
-/** How much a driver-local fast path may collect, decided for all of them:
-  * IVF training (`Ivf.driverTrain`), connected components
-  * (`Components.driverComponents`) and the dedup cluster relation
+/** How much a driver-local fast path may collect, decided for both of them:
+  * IVF training (`Ivf.driverTrain`) and the dedup cluster relation
   * (`TextQueries.driverClusterRelation`) each fall back to a distributed
   * twin when their input does not fit. One byte budget per collect,
   * maxMemory / 64 of the live driver heap (48 MB at 3 GiB, 128 MB at

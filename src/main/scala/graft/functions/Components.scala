@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Connected components by iterative min-label propagation — the dedup
   * end-game: near-dup PAIRS become CLUSTERS, and each cluster elects a
@@ -27,133 +26,33 @@ object Components {
     * billion-vertex scale broadcasting labels is exactly wrong. */
   private val BroadcastLabelCap = 5000000L
 
-  /** Worst-case driver heap per collected row of the single-collect fast
-    * path (r19, optimization-guide §8 "decide with small rows"), which
-    * [[graft.DriverCollect]] turns into row caps: an edge lands as one
-    * specialized Tuple2[Long, Long] (~32 B object + 8 B array slot), a
-    * vertex as an unboxed 8 B long plus ~48 B of LongMap/buffer
-    * bookkeeping. A graph within the budget is union-found on the driver in
-    * one collect per input + O(E α(V)) local work, replacing the loop's
-    * per-iteration driver planning (~0.3-0.5 s/round), label broadcasts and
-    * edge-frame shuffles — measured 2.7 s → ~0.3 s on q133's sf0.1 graph
-    * (3,935 vertices / 511,821 edges, 3 rounds). Beyond the budget (or
-    * non-long ids) the distributed loop below stands unchanged — at
-    * billion-edge scale collecting the graph is exactly wrong. */
-  private val VertexBytes = 56L
-  private val EdgeBytes = 40L
-
   /** vertices: (id) — one row per vertex; edges: (src, dst) undirected
-    * pairs. Returns (id, rep) with rep = min id in the component. */
+    * pairs. Returns (id, rep) with rep = min id in the component.
+    *
+    * UNDECLARED ("phantom") edge endpoints: the label joins confine a
+    * phantom id to round 0's raw neighbor-min, where it can LOWER a
+    * declared neighbor's label — and that label then spreads through the
+    * component via declared edges — but a phantom never BRIDGES two
+    * declared vertices (rounds ≥1 drop phantom edges on the label join, and
+    * the convergence certificate only inspects declared-declared edges).
+    * EdgeCaseSpec and ComponentsSpec pin this rule. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
       maxIter: Int = 20): DataFrame = {
-    driverComponents(vertices, edges)
-      .getOrElse(loopComponents(vertices, edges, maxIter))
-  }
-
-  /** Driver union-find over a bounded graph: one [[graft.DriverCollect]]
-    * collect per input, each within the shared budget (an overflow wastes
-    * one budget of rows, and the vertex overflow short-circuits BEFORE the
-    * edge collect so the expensive edge pipeline is never probed in that
-    * case), path-compressed union-find with min-id roots, and a local
-    * relation out (the caller broadcast-joins it, same as the loop's
-    * result). Long ids only — the loop handles anything least()-comparable,
-    * so non-long schemas simply keep the old path.
-    *
-    * UNDECLARED ("phantom") edge endpoints replicate the loop exactly
-    * (r19 ADVICE #2 adjudicated the divergence; the loop semantics are the
-    * documented contract): the loop's label joins confine a phantom id to
-    * round 0's raw neighbor-min, where it can LOWER a declared neighbor's
-    * label — and that label then spreads through the component via
-    * declared edges — but a phantom can never BRIDGE two declared
-    * vertices (rounds ≥1 drop phantom edges on the label join, and the
-    * convergence certificate only inspects declared-declared edges). So:
-    * union-find over declared-declared edges only, a per-vertex one-hop
-    * phantom minimum on the side, folded into each component's final min.
-    * EdgeCaseSpec pins the transitive-phantom and smaller-phantom cases on
-    * BOTH paths. */
-  private def driverComponents(vertices: DataFrame,
-      edges: DataFrame): Option[DataFrame] = {
-    val longIds = vertices.schema.fields.headOption.exists(_.dataType == LongType) &&
-      edges.schema.fields.forall(_.dataType == LongType)
-    if (!longIds) return None
-    val spark = vertices.sparkSession
-    import spark.implicits._
-    val vs = graft.DriverCollect.collect(vertices.select(col("id")).as[Long],
-      VertexBytes).getOrElse(return None)
-    val es = graft.DriverCollect.collect(edges.select(col("src"), col("dst"))
-      .as[(Long, Long)], EdgeBytes).getOrElse(return None)
-    val idx = new scala.collection.mutable.LongMap[Int](vs.length * 2)
-    val ids = new scala.collection.mutable.ArrayBuffer[Long](vs.length)
-    vs.foreach { id =>
-      if (!idx.contains(id)) { idx.put(id, ids.length); ids += id }
-    }
-    val nV = ids.length // output rows = declared vertices only
-    val uf = new MinUnionFind(ids.toArray)
-    // One-hop phantom minimum per declared vertex (the loop's round-0 raw
-    // neighbor-min contribution from undeclared endpoints).
-    val phanMin = Array.fill(nV)(Long.MaxValue)
-    es.foreach { case (a, b) =>
-      val ia = idx.getOrElse(a, -1)
-      val ib = idx.getOrElse(b, -1)
-      if (ia >= 0 && ib >= 0) uf.union(ia, ib)
-      else if (ia >= 0) {
-        if (b < phanMin(ia)) phanMin(ia) = b
-      } else if (ib >= 0) {
-        if (a < phanMin(ib)) phanMin(ib) = a
-      } // both undeclared: the loop never sees the edge — drop it
-    }
-    // Fold the one-hop phantom minima into each component's root: the loop
-    // spreads a round-0-lowered label through the component's declared
-    // edges, so the fixpoint is min(component ids, members' phantom mins).
-    val rootPhan = Array.fill(nV)(Long.MaxValue)
-    var i = 0
-    while (i < nV) {
-      val r = uf.find(i)
-      if (phanMin(i) < rootPhan(r)) rootPhan(r) = phanMin(i)
-      i += 1
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("rep", LongType, nullable = false)))
-    val out = (0 until nV).map { k =>
-      val r = uf.find(k)
-      Row(ids(k), math.min(ids(r), rootPhan(r)))
-    }
-    Some(spark.createDataFrame(
-      new java.util.ArrayList[Row](scala.jdk.CollectionConverters
-        .SeqHasAsJava(out).asJava), schema))
-  }
-
-  /** Path-compressed union-find with min-key roots, so a root's key is its
-    * component's minimum — the fixpoint of the loop's least()-propagation.
-    * Shared by both driver fast paths (here and the dedup clusters). */
-  private[graft] final class MinUnionFind(keys: Array[Long]) {
-    private val parent = Array.tabulate(keys.length)(identity)
-
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-
-    def union(a: Int, b: Int): Unit = {
-      val ra = find(a)
-      val rb = find(b)
-      if (ra != rb) {
-        if (keys(ra) < keys(rb)) parent(rb) = ra else parent(ra) = rb
-      }
-    }
-  }
-
-  private def loopComponents(vertices: DataFrame, edges: DataFrame,
-      maxIter: Int): DataFrame = {
     // Materialize the (possibly expensive) edge pipeline ONCE — the loop
     // re-reads it every iteration.
     val und = edges.select(col("src"), col("dst"))
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
       .cache()
+    // try/finally: Bench and the other drivers catch per-query exceptions
+    // and keep going, so a throwing round must not leave the cached edge
+    // frame in the block manager for the rest of the JVM.
+    try labelLoop(vertices, und, maxIter)
+    finally und.unpersist()
+  }
+
+  /** The min-label rounds over the cached undirected edge frame `und`. */
+  private def labelLoop(vertices: DataFrame, und: DataFrame,
+      maxIter: Int): DataFrame = {
     und.count()
     // localCheckpoint per iteration truncates lineage AND the logical plan —
     // without it every iteration nests the previous plan and analysis time
@@ -241,7 +140,6 @@ object Components {
       labels = step.select("id", "rep")
       i += 1
     }
-    und.unpersist()
     if (!converged)
       System.err.println(s"[components] WARNING: stopped at maxIter=$maxIter " +
         "without convergence — labels are PARTIAL (components may be split). " +

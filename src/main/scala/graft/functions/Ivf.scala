@@ -95,7 +95,7 @@ object Ivf {
     * pinned in SketchSpec across fixtures, synthetic and randomized
     * inputs): a driver-local fast path for bounded training sets
     * ([[driverTrain]] — optimization-guide §8 "decide with small rows",
-    * the Components.driverComponents pattern) and the distributed loop
+    * the dedup cluster relation's pattern) and the distributed loop
     * ([[loopTrain]]) beyond [[graft.DriverCollect]]'s budget or for
     * non-(long, array<double>) schemas. */
   def train(vecs: DataFrame, idCol: String, vecCol: String,

@@ -71,6 +71,26 @@ object MinHash {
     docs.groupBy(sort_array(col(tokensCol)).as("toks"))
       .agg(collect_list(col(idCol)).as("ids"), min(col(idCol)).as("rep"))
 
+  /** Set pairs back to document pairs, shared by q50 and q51: `grouped` is
+    * [[distinctSets]]' (rep, ids) output and `confirmed` holds (r1, r2,
+    * `scoreCol`) pairs of its reps. Each confirmed pair becomes every cross
+    * pair of its two sets' members, and every two members of one set pair
+    * up scored `sameSet`. Output: (d1 < d2, `scoreCol`). */
+  def setPairsToDocPairs(grouped: DataFrame, confirmed: DataFrame,
+      scoreCol: String, sameSet: Column): DataFrame = {
+    val members = grouped.select(col("rep"), explode(col("ids")).as("id"))
+    val inter = confirmed
+      .join(members.select(col("rep").as("r1"), col("id").as("ida")), "r1")
+      .join(members.select(col("rep").as("r2"), col("id").as("idb")), "r2")
+      .select(least(col("ida"), col("idb")).as("d1"),
+        greatest(col("ida"), col("idb")).as("d2"), col(scoreCol))
+    val intra = members.select(col("rep"), col("id").as("ida"))
+      .join(members.select(col("rep"), col("id").as("idb")), "rep")
+      .filter(col("ida") < col("idb"))
+      .select(col("ida").as("d1"), col("idb").as("d2"), sameSet.as(scoreCol))
+    inter.unionByName(intra)
+  }
+
   /** Candidate near-dup pairs via LSH banding, confirmed by exact Jaccard.
     * Input: (idCol, tokens array). Output: d1, d2, jac (double) with
     * jac >= threshold. Exact-verify step makes precision 1.0; recall follows
@@ -189,18 +209,7 @@ object MinHash {
         .filter(col("jac") >= threshold)
         .select("r1", "r2", "jac")
     }
-    val members = grouped.select(col("rep"), explode(col("ids")).as("id"))
-    val inter = confirmed
-      .join(members.select(col("rep").as("r1"), col("id").as("ida")), "r1")
-      .join(members.select(col("rep").as("r2"), col("id").as("idb")), "r2")
-      .select(least(col("ida"), col("idb")).as("d1"),
-        greatest(col("ida"), col("idb")).as("d2"), col("jac"))
-    val intra = members.select(col("rep"), col("id").as("ida"))
-      .join(members.select(col("rep"), col("id").as("idb")), "rep")
-      .filter(col("ida") < col("idb"))
-      .select(col("ida").as("d1"), col("idb").as("d2"),
-        lit(1.0).as("jac"))
-    inter.unionByName(intra)
+    setPairsToDocPairs(grouped, confirmed, "jac", lit(1.0))
   }
 }
 

@@ -73,10 +73,10 @@ object SketchQueries {
         // Fingerprint DISTINCT token sets (one grouped codegen pass), band
         // by 16-bit chunks, confirm hamming, then expand to doc pairs.
         // Checkpoint the collapsed-set stage like q50's nearDupPairs does
-        // (r20): the members expansion below references it once per join
-        // side plus twice in the intra self-join, and the un-checkpointed
-        // plan re-derived the corpus groupBy FOUR times — the r20 dump
-        // showed 8 parquet scans of documents in one q51 plan.
+        // (r20): the member expansion (MinHash.setPairsToDocPairs) reads it
+        // once per join side plus twice in the intra self-join, and the
+        // un-checkpointed plan re-derived the corpus groupBy FOUR times —
+        // the r20 dump showed 8 parquet scans of documents in one q51 plan.
         val grouped = graft.SessionCache.lazyLocalCheckpoint("q51-sets")(
           MinHash.distinctSets(docToks(s, dir), "doc_id", "toks"))
         val fp = SimHash.simhashAgg(
@@ -99,18 +99,8 @@ object SketchQueries {
           .withColumn("hamming", SimHash.hamming(col("s1"), col("s2")).cast("long"))
           .filter(col("hamming") <= 3)
           .select("r1", "r2", "hamming")
-        val members = grouped.select(col("rep"), explode(col("ids")).as("id"))
-        val inter = confirmed
-          .join(members.select(col("rep").as("r1"), col("id").as("ida")), "r1")
-          .join(members.select(col("rep").as("r2"), col("id").as("idb")), "r2")
-          .select(least(col("ida"), col("idb")).as("d1"),
-            greatest(col("ida"), col("idb")).as("d2"), col("hamming"))
-        val intra = members.select(col("rep"), col("id").as("ida"))
-          .join(members.select(col("rep"), col("id").as("idb")), "rep")
-          .filter(col("ida") < col("idb"))
-          .select(col("ida").as("d1"), col("idb").as("d2"),
-            lit(0L).as("hamming"))
-        inter.unionByName(intra).orderBy("d1", "d2")
+        MinHash.setPairsToDocPairs(grouped, confirmed, "hamming", lit(0L))
+          .orderBy("d1", "d2")
       }),
 
     // ---- I5 scale path: random-hyperplane LSH-bucketed ANN (non-oracle;

@@ -105,7 +105,7 @@ object TextQueries {
 
   /** Compute cap of the driver-local clustering fast path (r20,
     * optimization-guide §8 "decide with small rows" — the same pattern as
-    * Components.driverComponents and Ivf.driverTrain): within it, the J>0.8
+    * Ivf.driverTrain): within it, the J>0.8
     * pair graph AND its connected components are computed on the driver
     * from ONE (mask, srep) collect, replacing the distributed
     * crossJoin-pairs checkpoint, three setRep broadcast builds, and the
@@ -115,8 +115,11 @@ object TextQueries {
     * cap is COMPUTE: local all-pairs is n²/2 bitmask comparisons
     * single-threaded (~150 M/s), so 16384 sets ≈ 1.3e8 comparisons ≈ 1 s
     * worst-case — beyond that the 32-way codegen'd crossJoin wins and the
-    * distributed pipeline below stands unchanged (ScaleCheck's 10× corpus
-    * takes it). The distributed alternative is all-pairs over the SAME
+    * distributed pipeline below runs: the crossJoin builds the set-pair
+    * edges and Components.connectedComponents' min-label loop clusters
+    * them. Every fixture is within the cap (sf0.1: 3,935 sets); ScaleCheck's
+    * 10× corpus is past it and runs that pipeline. The distributed
+    * alternative is all-pairs over the SAME
     * relation, so any corpus for which the old path was viable is within
     * ~10× of this cap anyway. */
   private val DriverSetCap = 16384L
@@ -197,7 +200,7 @@ object TextQueries {
     val n = sets.length
     // min-SREP roots: the root's srep is the component minimum, the
     // invariant Components' least()-propagation converges to.
-    val uf = new graft.functions.Components.MinUnionFind(sets.map(_._2))
+    val uf = new MinUnionFind(sets.map(_._2))
     var i = 0
     while (i < n) {
       val (mi, _) = sets(i)
@@ -221,6 +224,29 @@ object TextQueries {
       .select(col("doc_id"), col("rep").as("cluster_rep"))
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_rep")))))
+  }
+
+  /** Path-compressed union-find with min-key roots, so a root's key is its
+    * component's minimum — the fixpoint of Components' least()-propagation.
+    * Serves [[driverClusterRelation]]. */
+  private final class MinUnionFind(keys: Array[Long]) {
+    private val parent = Array.tabulate(keys.length)(identity)
+
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != c) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+
+    def union(a: Int, b: Int): Unit = {
+      val ra = find(a)
+      val rb = find(b)
+      if (ra != rb) {
+        if (keys(ra) < keys(rb)) parent(rb) = ra else parent(ra) = rb
+      }
+    }
   }
 
   private def exactNearDupPairs(s: SparkSession, dir: String): DataFrame = {

@@ -351,22 +351,22 @@ object VectorFunctions {
       s"$fn: $arg must be a foldable INT expression (e.g. a literal), " +
         s"got ${e.sql}")
 
-  private[plans] val dotBuilder: Seq[Expression] => Expression = { exprs =>
+  private val dotBuilder: Seq[Expression] => Expression = { exprs =>
     arity("graft_dot", "graft_dot(a, b)", 2)(exprs)
     DotProduct(exprs(0), exprs(1))
   }
-  private[plans] val topkBuilder: Seq[Expression] => Expression =
+  private val topkBuilder: Seq[Expression] => Expression =
     exprs => TopKBy.fromExprs(exprs) // fromExprs carries its own arity check
-  private[plans] val minhashBuilder: Seq[Expression] => Expression = { exprs =>
+  private val minhashBuilder: Seq[Expression] => Expression = { exprs =>
     arity("graft_minhash", "graft_minhash(tokens, numHashes)", 2)(exprs)
     MinHashSignature(exprs(0),
       foldableInt("graft_minhash", "numHashes", exprs(1)))
   }
-  private[plans] val shinglesBuilder: Seq[Expression] => Expression = { exprs =>
+  private val shinglesBuilder: Seq[Expression] => Expression = { exprs =>
     arity("graft_shingles", "graft_shingles(tokens, n)", 2)(exprs)
     GramShingles(exprs(0), foldableInt("graft_shingles", "n", exprs(1)))
   }
-  private[plans] val vecOkBuilder: Seq[Expression] => Expression = { exprs =>
+  private val vecOkBuilder: Seq[Expression] => Expression = { exprs =>
     arity("graft_vec_ok", "graft_vec_ok(v)", 1)(exprs)
     VectorDefined(exprs(0))
   }
@@ -386,7 +386,7 @@ object VectorFunctions {
     }
   }
 
-  private[plans] val lshBuilder: Seq[Expression] => Expression = { exprs =>
+  private val lshBuilder: Seq[Expression] => Expression = { exprs =>
     arity("graft_lsh_buckets", "graft_lsh_buckets(v, planes, k)", 3)(exprs)
     val planes = foldablePlanes("graft_lsh_buckets", exprs(1))
     val k = foldableInt("graft_lsh_buckets", "k", exprs(2))
@@ -397,7 +397,18 @@ object VectorFunctions {
     LshBuckets(exprs(0), planes, k)
   }
 
-  /** Registers `graft_dot(a, b)` and `graft_topk(score, id, k)` in the
+  /** Every graft function as (SQL name, expression class, builder): the
+    * one list both registration paths install, so neither can miss one. */
+  private[plans] val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq(
+      ("graft_dot", classOf[DotProduct], dotBuilder),
+      ("graft_topk", classOf[TopKBy], topkBuilder),
+      ("graft_minhash", classOf[MinHashSignature], minhashBuilder),
+      ("graft_shingles", classOf[GramShingles], shinglesBuilder),
+      ("graft_vec_ok", classOf[VectorDefined], vecOkBuilder),
+      ("graft_lsh_buckets", classOf[LshBuckets], lshBuilder))
+
+  /** Registers every graft function ([[functions]]) in the
     * session so the public `expr` API can reach the custom expressions.
     * Idempotent AND once-per-session: call inside each query fn (the
     * harness owns SparkSession construction — SURVEY §7.6); the
@@ -410,23 +421,16 @@ object VectorFunctions {
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     // Guard each function INDEPENDENTLY: a single graft_dot-only guard
-    // around both registrations leaves a window where a concurrent caller
+    // around all registrations leaves a window where a concurrent caller
     // sees graft_dot present, skips graft_topk, and the registry stays
     // half-populated forever (UNRESOLVED_ROUTINE on the next graft_topk
     // plan). Per-function check-then-createOrReplace is race-safe because
     // createOrReplaceTempFunction itself is idempotent.
-    def ensure(name: String)(
-        builder: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          org.apache.spark.sql.catalyst.expressions.Expression): Unit =
+    functions.foreach { case (name, _, builder) =>
       if (!reg.functionExists(
           new org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
         reg.createOrReplaceTempFunction(name, builder, "built-in")
-    ensure("graft_dot")(dotBuilder)
-    ensure("graft_topk")(topkBuilder)
-    ensure("graft_minhash")(minhashBuilder)
-    ensure("graft_shingles")(shinglesBuilder)
-    ensure("graft_vec_ok")(vecOkBuilder)
-    ensure("graft_lsh_buckets")(lshBuilder)
+    }
   }
 }
 
@@ -440,37 +444,14 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => KnnStrategy)
     ext.injectOptimizerRule(_ => KnnFilterPushdown)
-    // Builders are the SAME objects VectorFunctions.register uses — one
-    // definition of the arity/foldable-int rules for both paths.
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_dot"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[DotProduct].getCanonicalName, "graft_dot"),
-      VectorFunctions.dotBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_topk"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[TopKBy].getCanonicalName, "graft_topk"),
-      VectorFunctions.topkBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_minhash"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[MinHashSignature].getCanonicalName, "graft_minhash"),
-      VectorFunctions.minhashBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_shingles"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[GramShingles].getCanonicalName, "graft_shingles"),
-      VectorFunctions.shinglesBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_vec_ok"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[VectorDefined].getCanonicalName, "graft_vec_ok"),
-      VectorFunctions.vecOkBuilder))
-    ext.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("graft_lsh_buckets"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[LshBuckets].getCanonicalName, "graft_lsh_buckets"),
-      VectorFunctions.lshBuilder))
+    // The SAME list VectorFunctions.register installs — one definition of
+    // the names and the arity/foldable-int rules for both paths.
+    VectorFunctions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((
+        new org.apache.spark.sql.catalyst.FunctionIdentifier(name),
+        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
+          cls.getCanonicalName, name),
+        builder))
+    }
   }
 }

@@ -45,18 +45,31 @@ class ComponentsSpec extends AnyFunSuite {
     (0 until n).map(v => v.toLong -> find(v).toLong).toMap
   }
 
-  /** Both execution paths (DriverPaths), pinned against each other by the
-    * callers and against the reference: the default budget routes these
-    * tiny graphs through the r19 driver union-find. */
-  private def ccOf(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] =
-    DriverPaths.bothAgree(s"n=$n edges=$edges") {
-      val verts = (0L until n.toLong).toDF("id")
-      val edf = if (edges.isEmpty)
-        Seq.empty[(Long, Long)].toDF("src", "dst")
-      else edges.toDF("src", "dst")
-      Components.connectedComponents(verts, edf)
-        .as[(Long, Long)].collect().toMap
-    }
+  /** Reference for the documented phantom-endpoint rule: union-find over
+    * the edges whose endpoints are both declared (ids in [0, n)); each
+    * component's rep is the minimum of its member ids and their one-hop
+    * undeclared neighbours. */
+  private def phantomComponents(n: Int,
+      edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    def declared(v: Long): Boolean = v >= 0 && v < n
+    val uf = ufComponents(n,
+      edges.filter { case (a, b) => declared(a) && declared(b) })
+    val phantomNbrs = edges.flatMap { case (a, b) => Seq(a -> b, b -> a) }
+      .filter { case (u, v) => declared(u) && !declared(v) }
+      .map { case (u, v) => uf(u) -> v }
+    val compMin = (uf.toSeq.map(_.swap) ++ phantomNbrs)
+      .groupMapReduce(_._1)(_._2)(math.min)
+    uf.map { case (v, r) => v -> compMin(r) }
+  }
+
+  private def ccOf(n: Int, edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val verts = (0L until n.toLong).toDF("id")
+    val edf = if (edges.isEmpty)
+      Seq.empty[(Long, Long)].toDF("src", "dst")
+    else edges.toDF("src", "dst")
+    Components.connectedComponents(verts, edf)
+      .as[(Long, Long)].collect().toMap
+  }
 
   // Randomized insurance on the round-10 fixpoint-exit rewrite: the loop now
   // exits on the edge-violation certificate (round ≥1) or changed==0 (round
@@ -76,20 +89,42 @@ class ComponentsSpec extends AnyFunSuite {
   }
 
   test("phantom-endpoint random graphs: driver and loop paths agree") {
-    // r19 ADVICE #2: the two paths used to diverge on undeclared edge
-    // endpoints (the driver union-find bridged through phantoms, the loop
-    // only lets a phantom lower a neighbor's label at round 0). The driver
-    // path now replicates the loop; random graphs with endpoints drawn
-    // from [-n, 2n) — ids outside [0, n) are undeclared, including ones
-    // SMALLER than every declared id (the label-lowering case) — must
-    // agree exactly between the paths.
+    // Random graphs with endpoints drawn from [-n, 2n): ids outside [0, n)
+    // are undeclared, including ones SMALLER than every declared id (the
+    // label-lowering case). The loop must follow the documented rule
+    // exactly: phantoms lower a label one hop, never bridge.
     val rnd = new scala.util.Random(7)
     for (trial <- 1 to 5) {
       val n = 2 + rnd.nextInt(20)
       val m = 1 + rnd.nextInt(40)
-      ccOf(n, Seq.fill(m)(
-        ((rnd.nextInt(3 * n) - n).toLong, (rnd.nextInt(3 * n) - n).toLong)))
+      val edges = Seq.fill(m)(
+        ((rnd.nextInt(3 * n) - n).toLong, (rnd.nextInt(3 * n) - n).toLong))
+      assert(ccOf(n, edges) == phantomComponents(n, edges),
+        s"trial $trial (n=$n, m=$m, edges=$edges)")
     }
+  }
+
+  test("connected components: a round that throws releases the cached edge frame") {
+    // The vertex relation raises when evaluated: the edge frame caches and
+    // materializes, then the first label count throws.
+    val verts = spark.range(3)
+      .select(expr("coalesce(assert_true(id < 0), id)").as("id"))
+    val edges = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    intercept[Exception](Components.connectedComponents(verts, edges))
+    // The lazy label checkpoint the failed round made is weakly held and
+    // goes with a GC; a leaked edge frame is held by the cache manager and
+    // stays, so poll through a few GCs before comparing.
+    def added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    var polls = 0
+    while (added.nonEmpty && polls < 40) {
+      System.gc()
+      Thread.sleep(250)
+      polls += 1
+    }
+    assert(added.isEmpty,
+      s"persisted RDDs left behind: ${added.values.map(_.name)}")
   }
 
   test("adversarial shapes: long path, cycle, star, edge-free round-0 exit") {

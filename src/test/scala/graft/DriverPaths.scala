@@ -3,7 +3,7 @@ package graft
 import org.scalatest.Assertions._
 
 /** The driver == distributed harness for the driver-local fast paths
-  * (Ivf.train, Components.connectedComponents, the dedup cluster relation).
+  * (Ivf.train and the dedup cluster relation).
   * A fast path is only legal because it is a semantic no-op, so every spec
   * runs the same body twice: under the heap-derived collect budget, which
   * takes the fast path on the small inputs the specs use, and under a zero

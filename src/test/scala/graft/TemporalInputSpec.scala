@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (incl. pre-epoch flooring), unix_micros/epoch_us, ts→date, year(),
   * proleptic-Gregorian datediff (neither skips the Julian gap), the NTZ
   * make_timestamp reinterpretation — proven end-to-end by
-  * dev/temporal_compare.sh (Verify on the poisoned corpus → exactly the
+  * dev/axis_compare.sh temporal (Verify on the poisoned corpus → exactly the
   * one designed abort → full DuckDB compare over the remaining 122
   * oracled queries → PASS, 0 failures). NO excluded asymmetries, unlike
   * the unicode axis; the oracle tier is frozen by dev/oracle_probe.py

@@ -165,7 +165,7 @@ object UnicodeFixture {
 }
 
 /** Materialize the unicode corpus and print the dir — the committed
-  * entry point for external harnesses (dev/unicode_compare.sh), the
+  * entry point for external harnesses (dev/axis_compare.sh unicode), the
   * SkewFixtureMain/NonFiniteFixtureMain idiom. */
 object UnicodeFixtureMain {
   def main(a: Array[String]): Unit = {

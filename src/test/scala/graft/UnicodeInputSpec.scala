@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * every text function the query surface uses): the engines AGREE on
   * code-point semantics for length/substring/split/regex/case-roundtrip/
   * hash/sort/JSON-escape over every class in the corpus — proven
-  * end-to-end by dev/unicode_compare.sh (Verify on the poisoned corpus →
+  * end-to-end by dev/axis_compare.sh unicode (Verify on the poisoned corpus →
   * 0 aborts → full DuckDB compare → PASS 123 oracled + 11 rows-only) —
   * and DIVERGE on exactly four adjudicated engine asymmetries, excluded
   * from the corpus and pinned here (engine side) + in

@@ -157,9 +157,10 @@ object SessionCache {
     * (see [[pin]]). Only the result stage is deferred: under AQE the call
     * runs every shuffle and broadcast stage of `df` at once, so checkpoint
     * a frame only where some path reads it. Every multi-consumer shared
-    * subplan in the engine
-    * (q78/q133's cluster relation, q122/q129, MinHash, SemanticDedup)
-    * goes through here, each under its own site tag. */
+    * subplan in the engine (the near-dup set relation and set pairs of
+    * q33/q78/q133 and q78/q133's cluster relation, the Components label
+    * rounds, q122/q129, MinHash, q51, SemanticDedup) goes through here,
+    * each under its own site tag. */
   def lazyLocalCheckpoint(tag: String)(
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // The site tag alone is NOT the pin key: sites whose tag doesn't embed
@@ -175,6 +176,17 @@ object SessionCache {
     pin(df.sparkSession, tag + ":" + h, df)
     df.localCheckpoint(eager = false)
   }
+
+  /** Unpersists the blocks of every checkpoint `df` reads (a
+    * [[lazyLocalCheckpoint]] frame or a projection of one). Only for a
+    * frame that no later plan reads. A checkpoint that a later pinned plan
+    * reads stays reachable, so the ContextCleaner never drops its blocks on
+    * its own (the Components label rounds). */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.queryExecution.analyzed.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
 
   /** Visible for tests: current number of live pins. */
   private[graft] def pinCount: Int = {

@@ -137,6 +137,10 @@ object Components {
             .filter(col("srep") =!= col("drep"))
             .count() == 0L
         }
+      // The action has materialized `step`, so the previous labels and this
+      // round's step1 are read by no later plan: drop their blocks.
+      graft.SessionCache.releaseCheckpoint(labels)
+      graft.SessionCache.releaseCheckpoint(step1)
       labels = step.select("id", "rep")
       i += 1
     }

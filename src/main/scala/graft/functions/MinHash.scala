@@ -71,11 +71,47 @@ object MinHash {
     docs.groupBy(sort_array(col(tokensCol)).as("toks"))
       .agg(collect_list(col(idCol)).as("ids"), min(col(idCol)).as("rep"))
 
-  /** Set pairs back to document pairs, shared by q50 and q51: `grouped` is
-    * [[distinctSets]]' (rep, ids) output and `confirmed` holds (r1, r2,
-    * `scoreCol`) pairs of its reps. Each confirmed pair becomes every cross
-    * pair of its two sets' members, and every two members of one set pair
-    * up scored `sameSet`. Output: (d1 < d2, `scoreCol`). */
+  /** `sets` with a `mask` column: each set's tokens as one 64-bit mask over
+    * the corpus vocabulary, or None when the vocabulary has more than 64
+    * words (shiftleft wraps mod 64, so a 65th word would alias bit 0). The
+    * one bit layout behind every exact Jaccard of the engine: q50's
+    * bitmask confirm and the q33/q78/q133 set relation. `sets` holds a
+    * `toks` array column and is read twice, by the vocabulary probe (one
+    * job) and by the fold, so checkpoint it first.
+    *
+    * Bits follow array_position over the vocabulary sorted by UTF-8 bytes
+    * (UTF8String/sort_array binary order — NOT java String order, which
+    * diverges on supplementary planes), the rank row_number-over-orderBy
+    * gave the older explode → window → join → sum derivation (PropertySpec
+    * pins the two equal). The OR-fold is duplicate-proof and skips null
+    * tokens, so a null takes no bit, a pure bit permutation invisible to
+    * popcount Jaccard; a set of nulls only folds to mask 0. */
+  def tokenMasks(sets: DataFrame): Option[DataFrame] = {
+    // limit(65): only "is it > 64" matters — don't pay a full-corpus
+    // distinct count for a branch decision. When the vocabulary fits, the
+    // probe has fetched all of it, so the fold takes it as a local literal.
+    val vocabRows = sets.select(explode(col("toks")).as("tok")).distinct()
+      .limit(65).collect().map(_.getString(0))
+    if (vocabRows.length > 64) None
+    else {
+      val vocab = typedLit(vocabRows.filter(_ != null).sortWith { (a, b) =>
+        java.util.Arrays.compareUnsigned(
+          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
+      }.toSeq)
+      Some(sets.withColumn("mask",
+        aggregate(col("toks"), lit(0L), (acc, t) =>
+          when(t.isNull, acc).otherwise(acc.bitwiseOR(
+            call_function("shiftleft", lit(1L),
+              call_function("array_position", vocab, t).cast("int") - 1))))))
+    }
+  }
+
+  /** Set pairs back to document pairs, shared by q33, q50 and q51:
+    * `grouped` is [[distinctSets]]' (rep, ids) output and `confirmed` holds
+    * (r1, r2, `scoreCol`) pairs of its reps. Each confirmed pair becomes
+    * every cross pair of its two sets' members, and every two members of
+    * one set pair up scored `sameSet`. Output: (d1 < d2, `scoreCol`). */
   def setPairsToDocPairs(grouped: DataFrame, confirmed: DataFrame,
       scoreCol: String, sameSet: Column): DataFrame = {
     val members = grouped.select(col("rep"), explode(col("ids")).as("id"))
@@ -138,76 +174,37 @@ object MinHash {
     // string-array intersections — same result, far cheaper per candidate.
     // (An AQE-style data-dependent plan choice; the array path is the
     // general case for open vocabularies.)
-    val vocab = sets.select(explode(col("toks")).as("tok")).distinct()
-    // limit(65): only "is it > 64" matters — don't pay a full-corpus
-    // distinct count for a branch decision.
-    val vocabRows = vocab.limit(65).collect().map(_.getString(0))
-    val confirmed = if (vocabRows.length <= 64) {
-      // Vocabulary as a LOCAL sorted literal + per-set OR-fold — the
-      // round-9 q33 maskPairs rewrite applied here in r20: the ≤65-row
-      // probe already fetches the whole vocabulary when this branch
-      // applies, so the old derivation — vocab distinct feeding a global
-      // row_number window (2 exchanges), an explode, a broadcast join and
-      // a groupBy shuffle, and the r20 plan dump showed that ENTIRE
-      // subtree planned TWICE, once per confirm side (r1/r2 aliases
-      // defeat exchange reuse) — collapses to one fold expression over
-      // the checkpointed sets. Bit assignment is unchanged:
-      // array_position over the UTF-8-byte-sorted vocab (exactly
-      // UTF8String/sort_array binary order — NOT java String order, which
-      // diverges on supplementary planes) ranks tokens like
-      // row_number-over-orderBy did; a null token (which the old window
-      // RANKED but the old join then dropped) is dropped from the layout
-      // here, a pure bit permutation invisible to the popcount Jaccard;
-      // the OR-fold is duplicate-proof (the old sum needed
-      // array_distinct) and the when() keeps null tokens contributing
-      // nothing, like the old inner join did. One semantic note: a
-      // zero-token set now carries mask 0 instead of having NO mask row,
-      // so an (empty, non-empty) candidate reaches the Jaccard filter
-      // (Jaccard 0) and a pair of mask-0 sets the empty-union guard below,
-      // instead of being dropped by the old inner join — identical output
-      // for any threshold > 0 (EdgeCaseSpec pins the empty-token contract;
-      // thresholds ≤ 0 are out of contract, the S-curve is meaningless
-      // there).
-      val vocabSorted = vocabRows.filter(_ != null).sortWith { (a, b) =>
-        java.util.Arrays.compareUnsigned(
-          a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-          b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) < 0
-      }.toSeq
-      val vlit = typedLit(vocabSorted)
-      val masks = graft.SessionCache.lazyLocalCheckpoint("minhash-masks")(
-        sets.select(col("rep"),
-          aggregate(col("toks"), lit(0L), (acc, t) =>
-            when(t.isNull, acc).otherwise(acc.bitwiseOR(
-              call_function("shiftleft", lit(1L),
-                call_function("array_position", vlit, t).cast("int") - 1))))
-            .as("mask")))
-      cand
-        .join(broadcast(masks.select(col("rep").as("r1"), col("mask").as("m1"))), "r1")
-        .join(broadcast(masks.select(col("rep").as("r2"), col("mask").as("m2"))), "r2")
-        // Two sets that both fold to mask 0 ([null] and [null, null]) share
-        // one signature, so they collide in every band; their 0/0 Jaccard
-        // (DIVIDE_BY_ZERO under ANSI) must never be computed (the cluster
-        // path's `uni > 0` guard).
-        .filter(expr("bit_count(m1 | m2) > 0"))
-        .withColumn("jac",
-          expr("bit_count(m1 & m2)").cast("double") / expr("bit_count(m1 | m2)"))
-        .filter(col("jac") >= threshold)
-        .groupBy("r1", "r2").agg(first(col("jac")).as("jac"))
-    } else {
-      // Open vocabulary: token arrays are too wide to broadcast blindly —
-      // dedupe candidates first, then shuffle-join the set arrays in.
-      // Nulls dropped and empty unions skipped, as in the bitmask confirm,
-      // so the pairs do not depend on the vocabulary size.
-      val candD = cand.distinct()
-      val t1 = sets.select(col("rep").as("r1"), array_compact(col("toks")).as("t1"))
-      val t2 = sets.select(col("rep").as("r2"), array_compact(col("toks")).as("t2"))
-      candD.join(t1, "r1").join(t2, "r2")
-        .withColumn("uni", size(array_union(col("t1"), col("t2"))))
-        .filter(col("uni") > 0)
-        .withColumn("jac",
-          size(array_intersect(col("t1"), col("t2"))).cast("double") / col("uni"))
-        .filter(col("jac") >= threshold)
-        .select("r1", "r2", "jac")
+    val confirmed = tokenMasks(sets) match {
+      case Some(m) =>
+        val masks = graft.SessionCache.lazyLocalCheckpoint("minhash-masks")(
+          m.select("rep", "mask"))
+        cand
+          .join(broadcast(masks.select(col("rep").as("r1"), col("mask").as("m1"))), "r1")
+          .join(broadcast(masks.select(col("rep").as("r2"), col("mask").as("m2"))), "r2")
+          // Two sets that both fold to mask 0 ([null] and [null, null]) share
+          // one signature, so they collide in every band; their 0/0 Jaccard
+          // (DIVIDE_BY_ZERO under ANSI) must never be computed (the cluster
+          // path's `uni > 0` guard).
+          .filter(expr("bit_count(m1 | m2) > 0"))
+          .withColumn("jac",
+            expr("bit_count(m1 & m2)").cast("double") / expr("bit_count(m1 | m2)"))
+          .filter(col("jac") >= threshold)
+          .groupBy("r1", "r2").agg(first(col("jac")).as("jac"))
+      case None =>
+        // Open vocabulary: token arrays are too wide to broadcast blindly —
+        // dedupe candidates first, then shuffle-join the set arrays in.
+        // Nulls dropped and empty unions skipped, as in the bitmask confirm,
+        // so the pairs do not depend on the vocabulary size.
+        val candD = cand.distinct()
+        val t1 = sets.select(col("rep").as("r1"), array_compact(col("toks")).as("t1"))
+        val t2 = sets.select(col("rep").as("r2"), array_compact(col("toks")).as("t2"))
+        candD.join(t1, "r1").join(t2, "r2")
+          .withColumn("uni", size(array_union(col("t1"), col("t2"))))
+          .filter(col("uni") > 0)
+          .withColumn("jac",
+            size(array_intersect(col("t1"), col("t2"))).cast("double") / col("uni"))
+          .filter(col("jac") >= threshold)
+          .select("r1", "r2", "jac")
     }
     setPairsToDocPairs(grouped, confirmed, "jac", lit(1.0))
   }

@@ -94,6 +94,13 @@ object Q {
   /** Final-projection decimal(18,s) → double (same contract as out2/out6). */
   def outD(c: Column, scale: Int): Column =
     c.cast(s"decimal(18,$scale)").cast("double")
+
+  /** (doc_id, toks): each document's distinct space-split tokens, the input
+    * of every near-dup query (q33/q50/q51/q78/q133). NULL text gives NULL
+    * toks. */
+  def docToks(s: SparkSession, dir: String): DataFrame =
+    Tables.read(s, dir, "documents")
+      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
 }
 
 /** SURVEY §2 categories B (project/filter), C (joins), D1/D2 (agg, distinct),

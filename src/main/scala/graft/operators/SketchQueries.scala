@@ -20,10 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object SketchQueries {
 
-  private def docToks(s: SparkSession, dir: String): DataFrame =
-    Tables.read(s, dir, "documents")
-      .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
-
   lazy val defs: Seq[QueryDef] = Seq(
     // ---- D3: HyperLogLog approximate distinct (non-oracle; bound-tested) ----
     QueryDef(
@@ -58,7 +54,7 @@ object SketchQueries {
     QueryDef(
       "q50_minhash_lsh",
       (s, dir) =>
-        MinHash.nearDupPairs(docToks(s, dir), "doc_id", "toks",
+        MinHash.nearDupPairs(Q.docToks(s, dir), "doc_id", "toks",
             numHashes = 96, numBands = 16, threshold = 0.8)
           .withColumn("jac", col("jac").cast("decimal(9,6)").cast("double"))
           .orderBy("d1", "d2")),
@@ -78,7 +74,7 @@ object SketchQueries {
         // un-checkpointed plan re-derived the corpus groupBy FOUR times —
         // the r20 dump showed 8 parquet scans of documents in one q51 plan.
         val grouped = graft.SessionCache.lazyLocalCheckpoint("q51-sets")(
-          MinHash.distinctSets(docToks(s, dir), "doc_id", "toks"))
+          MinHash.distinctSets(Q.docToks(s, dir), "doc_id", "toks"))
         val fp = SimHash.simhashAgg(
           grouped.select(col("rep"), col("toks")), "rep", "toks")
         // Checkpoint before the self-join below: both candidate sides would

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.QueryDef
+import graft.functions.MinHash
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -13,12 +14,13 @@ import org.apache.spark.sql.functions._
   * regex tokenization, and dictionary language-ID.
   *
   * Scale notes (100 TB design, SURVEY §7.5):
-  * - The near-dup pair join (q33) never does a doc×doc cross join: documents
-  *   collapse to distinct token-SETs first (bitmasks here, since the corpus
-  *   vocabulary fits in 64 bits — the driver corpus has 31 words), pairs are
-  *   enumerated over distinct sets only, then expanded back to doc pairs.
-  *   For open vocabularies the same shape runs on MinHash/LSH buckets
-  *   (see functions.MinHash + q51) instead of exact masks.
+  * - The exact near-dup family (q33 pairs, q78/q133 clusters) never does a
+  *   doc×doc cross join. It runs on q50's set pipeline: documents collapse
+  *   to distinct token sets (MinHash.distinctSets), each set gets its 64-bit
+  *   token mask (MinHash.tokenMasks; the driver corpus has 31 words), pairs
+  *   are enumerated over distinct sets only, and MinHash.setPairsToDocPairs
+  *   expands them back to doc pairs. For open vocabularies the same shape
+  *   runs on MinHash/LSH buckets (q50) instead of all set pairs.
   * - TF-IDF / word-freq are linear explode→agg pipelines with map-side
   *   partial aggregation; the only global value (corpus size N) travels as a
   *   broadcast scalar, not a shuffle.
@@ -32,65 +34,46 @@ object TextQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "documents")
 
-  /** doc_id + distinct token array. */
-  private def docToks(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
+  /** Documents whose toks hold at least one token; false for NULL text
+    * (size(NULL) is NULL under ANSI, -1 without). */
+  private val hasToks = coalesce(size(col("toks")) > 0, lit(false))
 
-  /** (doc_id, mask): each document's distinct-token bitmask, the input of
-    * q33's exact Jaccard > 0.8 pairs and of near-dup clustering (q78).
-    * Corpus vocabulary is tiny (31 words, FIXTURES.md) → one 64-bit mask. */
-  private def docMasks(s: SparkSession, dir: String): DataFrame = {
-    // Vocabulary as ONE sorted array row (collect_set ⇒ two tiny agg
-    // stages), then each doc's mask is a shuffle-free projection: fold the
-    // doc's distinct tokens, OR-ing bit array_position-1. Byte-identical to
-    // the round-1..8 formulation (explode → row_number window → broadcast
-    // join → groupBy sum): sort_array assigns the same 0-based bit per
-    // token as row_number-over-orderBy did, and OR of distinct bits equals
-    // the old SUM. The filter(size > 0) keeps that equivalence exact for
-    // ANY input, not just split()-derived fixtures: the old explode path
-    // DROPPED empty/null-toks docs (nothing to explode), where the fold
-    // alone would emit a 0/NULL mask row (round-9 ADVICE). Null ELEMENTS
-    // inside toks remain out of contract — split() never produces them,
-    // and PropertySpec pins the equivalence on generated corpora including
-    // empty docs. The rewrite drops an explode, a window exchange and two
-    // shuffles from the hottest fixed-cost block of the q133/q33/q78 family
-    // (masks build 2.5 → ~1.0 s at sf0.1); the per-element HOF walk is
-    // interpreted, but it touches ≤64-token arrays on corpus-collapsed
-    // rows — compute-trivial at any scale, and the 100 TB-relevant shape
-    // (no shuffle keyed on token) only improves.
-    val tok = docToks(s, dir).select(col("doc_id"), explode(col("toks")).as("tok"))
-    // Runtime tripwire, zero extra jobs: shiftleft wraps mod 64, so a
-    // 65th vocabulary word would silently ALIAS bit 0 and corrupt every
-    // Jaccard downstream (q33/q78). Fail loudly; the open-vocabulary
-    // answer is the MinHash/LSH path (q50).
-    val vocab = tok.agg(sort_array(collect_set(col("tok"))).as("vocab"))
-      .filter(expr("ifnull(assert_true(size(vocab) <= 64, " +
-        "'vocabulary exceeds 64 words: bitmask Jaccard invalid, use MinHash/LSH (q50)'), true)"))
-    docToks(s, dir).filter(size(col("toks")) > 0)
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"), expr(
-        "aggregate(toks, CAST(0 AS BIGINT), (acc, t) -> " +
-          "acc | shiftleft(CAST(1 AS BIGINT), " +
-          "CAST(array_position(vocab, t) AS INT) - 1))").as("mask"))
-  }
+  /** (rep, ids, mask): the exact near-dup set relation behind q33, q78 and
+    * q133. One row per distinct token set of the documents with tokens
+    * ([[MinHash.distinctSets]], rep = the set's min doc id), with the set's
+    * 64-bit token mask ([[MinHash.tokenMasks]], q50's bit layout). Throws
+    * at DataFrame build when the vocabulary exceeds 64 words. The set
+    * groupBy is lazily checkpointed (the vocabulary probe materializes it)
+    * and the relation memoized per (session, dir) via
+    * [[graft.SessionCache]]: q33 and the q78/q133 cluster relation read the
+    * same sets. */
+  private def setsCached(s: SparkSession, dir: String): DataFrame =
+    graft.SessionCache.getOrBuild(s, s"dedup-sets:$dir") {
+      val grouped = graft.SessionCache.lazyLocalCheckpoint(s"dedup-sets:$dir")(
+        MinHash.distinctSets(docToks(s, dir).filter(hasToks), "doc_id", "toks"))
+      MinHash.tokenMasks(grouped).getOrElse(throw new IllegalArgumentException(
+        "vocabulary exceeds 64 words: bitmask Jaccard invalid, use MinHash/LSH (q50)"))
+        .select("rep", "ids", "mask")
+    }
 
-  /** (m1, m2, inter, uni): distinct-set mask pairs with Jaccard > 0.8. */
-  private def setPairs(masks: DataFrame): DataFrame = {
-    val sets = masks.select("mask").distinct()
-    sets.select(col("mask").as("m1"))
-      .crossJoin(sets.select(col("mask").as("m2")))
-      .filter(col("m1") < col("m2"))
+  /** (r1 < r2, inter, uni): pairs of set reps with mask Jaccard > 0.8. */
+  private def setPairs(sets: DataFrame): DataFrame = {
+    val m = sets.select("rep", "mask")
+    m.select(col("rep").as("r1"), col("mask").as("m1"))
+      .crossJoin(m.select(col("rep").as("r2"), col("mask").as("m2")))
+      .filter(col("r1") < col("r2"))
       .withColumn("inter", expr("bit_count(m1 & m2)"))
       .withColumn("uni", expr("bit_count(m1 | m2)"))
       .filter(col("inter") / col("uni") > 0.8)
+      .select("r1", "r2", "inter", "uni")
   }
 
   /** (doc_id, cluster_rep, cluster_size) — q78's cluster relation, factored
     * so the dedup-ROI report (q133) aggregates the SAME clustering.
     * Clusters the distinct-SET graph (identical components, ~4x fewer
     * edges than the doc-expanded pair list), then maps docs through their
-    * set's representative; set rep = min(doc_id), so the component rep is
-    * the min doc id of the whole cluster. Memoized per (session, dir) via
+    * set's ids; set rep = min(doc_id), so the component rep is the min doc
+    * id of the whole cluster. Memoized per (session, dir) via
     * [[graft.SessionCache]] (the Ivf.trainCached pattern): q78 and q133 run
     * the heaviest pipeline in this file, and one lazily-checkpointed
     * DataFrame means the second consumer reuses the materialized
@@ -105,111 +88,86 @@ object TextQueries {
 
   /** Compute cap of the driver-local clustering fast path (r20,
     * optimization-guide §8 "decide with small rows" — the same pattern as
-    * Ivf.driverTrain): within it, the J>0.8
-    * pair graph AND its connected components are computed on the driver
-    * from ONE (mask, srep) collect, replacing the distributed
-    * crossJoin-pairs checkpoint, three setRep broadcast builds, and the
-    * whole Components subgraph (the r19 profile: q133 = 20 Spark jobs,
-    * 1.5 task-seconds — job/planning-bound). Heap is bounded by
-    * [[graft.DriverCollect]]'s budget at [[SetRowBytes]] a row; the binding
-    * cap is COMPUTE: local all-pairs is n²/2 bitmask comparisons
+    * Ivf.driverTrain): within it, the J>0.8 pair graph AND its connected
+    * components are computed on the driver from ONE (mask, rep) collect of
+    * the set relation, replacing the distributed crossJoin-pairs
+    * checkpoint and the whole Components subgraph (the r19 profile: q133 =
+    * 20 Spark jobs, 1.5 task-seconds — job/planning-bound). Heap is bounded
+    * by [[graft.DriverCollect]]'s budget at [[SetRowBytes]] a row; the
+    * binding cap is COMPUTE: local all-pairs is n²/2 bitmask comparisons
     * single-threaded (~150 M/s), so 16384 sets ≈ 1.3e8 comparisons ≈ 1 s
     * worst-case — beyond that the 32-way codegen'd crossJoin wins and the
-    * distributed pipeline below runs: the crossJoin builds the set-pair
-    * edges and Components.connectedComponents' min-label loop clusters
-    * them. Every fixture is within the cap (sf0.1: 3,935 sets); ScaleCheck's
-    * 10× corpus is past it and runs that pipeline. The distributed
-    * alternative is all-pairs over the SAME
-    * relation, so any corpus for which the old path was viable is within
-    * ~10× of this cap anyway. */
+    * distributed pipeline runs: the crossJoin builds the set-pair edges
+    * and Components.connectedComponents' min-label loop clusters them.
+    * Every fixture is within the cap (sf0.1: 3,935 sets); ScaleCheck's 10×
+    * corpus is past it and runs that pipeline. */
   private val DriverSetCap = 16384L
 
-  /** Heap of one collected (mask, srep) Tuple2[Long, Long] with its slot. */
+  /** Heap of one collected (mask, rep) Tuple2[Long, Long] with its slot. */
   private val SetRowBytes = 40L
 
-  /** [[docMasks]], lazily checkpointed and memoized per (session, dir) —
-    * r20: q33 and the q78/q133 cluster relation consume the same mask
-    * derivation, and before this helper q33 alone re-planned the masks
-    * subtree FOUR times (once per inter join side, twice in the intra
-    * self-join — 12 documents scans in one plan) while q33 and q78/q133
-    * each paid their own build within a bench session. SessionCache owns
-    * invalidation (bench retries) and dead-session sweeping. */
-  private def masksCached(s: SparkSession, dir: String): DataFrame =
-    graft.SessionCache.getOrBuild(s, s"dedup-masks:$dir") {
-      graft.SessionCache.lazyLocalCheckpoint(s"dedup-masks:$dir")(docMasks(s, dir))
-    }
-
-  /** [[setPairs]] over the checkpointed masks, checkpointed and memoized
-    * the same way, built only by its readers (q33, the distributed cluster
-    * path): the checkpoint runs the crossJoin's shuffle stages at once
-    * ([[graft.SessionCache.lazyLocalCheckpoint]]). */
+  /** [[setPairs]] over the set relation, lazily checkpointed and memoized
+    * per (session, dir), built only by its readers (q33, the distributed
+    * cluster path): the checkpoint runs the crossJoin's shuffle stages at
+    * once ([[graft.SessionCache.lazyLocalCheckpoint]]). */
   private def pairsCached(s: SparkSession, dir: String): DataFrame =
     graft.SessionCache.getOrBuild(s, s"dedup-pairs:$dir") {
       graft.SessionCache.lazyLocalCheckpoint(s"dedup-pairs:$dir")(
-        setPairs(masksCached(s, dir)))
+        setPairs(setsCached(s, dir)))
     }
 
   private[graft] def dedupClustersUncached(s: SparkSession,
       dir: String): DataFrame = {
-    val masks = masksCached(s, dir)
-    driverClusterRelation(masks).getOrElse {
-      // setRep/comp are per-DISTINCT-SET relations. Explicit broadcast: their
-      // inputs are checkpointed LogicalRDDs with unknown stats, so without the
-      // hint each join plans as a sort-merge over the 511 k-row pair frame
-      // (measured ~0.7 s of the und materialization alone). The broadcast is
-      // scale-safe by construction: the pairs stage upstream is all-pairs over
-      // distinct sets, which already constrains set cardinality far more
-      // tightly than the ~80 MB broadcast ceiling does — if the set count ever
-      // outgrew a broadcast, the cross join would have been the casualty first
-      // (and the open-vocabulary answer is the MinHash path, q50).
-      val setRep = masks.groupBy("mask").agg(min(col("doc_id")).as("srep"))
-      val docSet = masks.join(broadcast(setRep), "mask").select("doc_id", "srep")
-      val edges = pairsCached(s, dir)
-        .join(broadcast(setRep.select(col("mask").as("m1"), col("srep").as("src"))), "m1")
-        .join(broadcast(setRep.select(col("mask").as("m2"), col("srep").as("dst"))), "m2")
-        .select("src", "dst")
-      val verts = setRep.select(col("srep").as("id"))
-      val comp = graft.functions.Components.connectedComponents(verts, edges)
-      docSet.join(broadcast(comp), docSet("srep") === comp("id"))
-        .select(col("doc_id"), col("rep").as("cluster_rep"))
-        .withColumn("cluster_size",
-          count(lit(1)).over(Window.partitionBy(col("cluster_rep"))))
-    }
+    val sets = setsCached(s, dir)
+    // (id, rep): each set rep's component rep. Per-DISTINCT-SET, so the
+    // broadcast below is scale-safe by construction: the pair stage is
+    // all-pairs over distinct sets, which constrains the set count far more
+    // tightly than the broadcast ceiling does. Explicit, because a
+    // checkpointed LogicalRDD has unknown stats and would otherwise plan a
+    // sort-merge join.
+    val comp = driverClusterRelation(sets).getOrElse(
+      graft.functions.Components.connectedComponents(
+        sets.select(col("rep").as("id")),
+        pairsCached(s, dir).select(col("r1").as("src"), col("r2").as("dst"))))
+    val members = sets.select(col("rep").as("id"), explode(col("ids")).as("doc_id"))
+      .join(broadcast(comp), "id")
+      .select(col("doc_id"), col("rep").as("cluster_rep"))
+    // A document without tokens (NULL text) pairs with nothing: its own
+    // size-1 cluster, as in the oracle's reach relation.
+    val untokenized = docToks(s, dir).filter(!hasToks)
+      .select(col("doc_id"), col("doc_id").as("cluster_rep"))
+    members.unionByName(untokenized)
+      .withColumn("cluster_size",
+        count(lit(1)).over(Window.partitionBy(col("cluster_rep"))))
   }
 
-  /** Driver-local replica of the distributed cluster relation, byte-exact
-    * by construction: the collected (mask, srep) rows are the SAME
-    * distinct-set relation the crossJoin/Components path consumes
-    * (mask ↔ srep is 1:1 — docs belong to exactly one mask group, so the
-    * per-group min doc_ids are distinct); the pair predicate replicates the
-    * crossJoin filter exactly (m1 < m2 by Long compare; Jaccard =
-    * bit_count ints promoted to IEEE double division, > 0.8); min-id
-    * union-find converges to the same fixpoint as Components'
+  /** Driver-local replica of the distributed set clustering, byte-exact by
+    * construction: the collected (mask, rep) rows are the SAME set relation
+    * the crossJoin/Components path consumes; the pair predicate replicates
+    * the crossJoin filter exactly (Jaccard = bit_count ints promoted to IEEE
+    * double division, > 0.8; each unordered pair once, as r1 < r2 gives);
+    * min-rep union-find converges to the same fixpoint as Components'
     * least()-propagation (the ComponentsSpec equivalence argument, no
     * phantom endpoints possible since every edge endpoint is a collected
-    * srep). Returns None beyond [[graft.DriverCollect]]'s budget or
-    * [[DriverSetCap]] — the distributed pipeline is then the only
-    * execution, at the cost of this one re-aggregated limit-probe (an
-    * executeTake over the already-checkpointed masks frame). */
-  private def driverClusterRelation(masks: DataFrame): Option[DataFrame] = {
-    val spark = masks.sparkSession
+    * rep). Returns (id, rep), or None beyond [[graft.DriverCollect]]'s
+    * budget or [[DriverSetCap]] — the distributed pipeline is then the only
+    * execution, at the cost of this one limit-probe over the set relation. */
+  private def driverClusterRelation(sets: DataFrame): Option[DataFrame] = {
+    val spark = sets.sparkSession
     import spark.implicits._
-    val sets = graft.DriverCollect.collect(
-      masks.groupBy("mask").agg(min(col("doc_id")).as("srep")).as[(Long, Long)],
+    val rows = graft.DriverCollect.collect(
+      sets.select("mask", "rep").as[(Long, Long)],
       SetRowBytes, DriverSetCap).getOrElse(return None)
-    val n = sets.length
-    // min-SREP roots: the root's srep is the component minimum, the
+    val n = rows.length
+    // min-rep roots: the root's rep is the component minimum, the
     // invariant Components' least()-propagation converges to.
-    val uf = new MinUnionFind(sets.map(_._2))
+    val uf = new MinUnionFind(rows.map(_._2))
     var i = 0
     while (i < n) {
-      val (mi, _) = sets(i)
+      val mi = rows(i)._1
       var j = i + 1
       while (j < n) {
-        val (mj, _) = sets(j)
-        // crossJoin filter: m1 < m2 ∧ bit_count(m1&m2)/bit_count(m1|m2) > 0.8
-        // (both operand orders produce the same unordered pair set; the
-        // union-find is symmetric, so enumeration order is irrelevant).
+        val mj = rows(j)._1
         val inter = java.lang.Long.bitCount(mi & mj)
         val uni = java.lang.Long.bitCount(mi | mj)
         if (uni > 0 && inter.toDouble / uni.toDouble > 0.8) uf.union(i, j)
@@ -217,13 +175,8 @@ object TextQueries {
       }
       i += 1
     }
-    val out = (0 until n).map(k => (sets(k)._1, sets(k)._2, sets(uf.find(k))._2))
-    val rel = broadcast(
-      spark.createDataFrame(out).toDF("mask", "srep", "rep"))
-    Some(masks.join(rel, "mask")
-      .select(col("doc_id"), col("rep").as("cluster_rep"))
-      .withColumn("cluster_size",
-        count(lit(1)).over(Window.partitionBy(col("cluster_rep")))))
+    Some(spark.createDataFrame((0 until n).map(k => (rows(k)._2, rows(uf.find(k))._2)))
+      .toDF("id", "rep"))
   }
 
   /** Path-compressed union-find with min-key roots, so a root's key is its
@@ -247,22 +200,6 @@ object TextQueries {
         if (keys(ra) < keys(rb)) parent(rb) = ra else parent(ra) = rb
       }
     }
-  }
-
-  private def exactNearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val masks = masksCached(s, dir)
-    val inter = pairsCached(s, dir)
-      .join(masks.select(col("doc_id").as("da"), col("mask").as("m1")), "m1")
-      .join(masks.select(col("doc_id").as("db"), col("mask").as("m2")), "m2")
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"),
-        (col("inter") / col("uni")).cast("decimal(9,6)").cast("double").as("jac"))
-    val intra = masks.select(col("doc_id").as("da"), col("mask"))
-      .join(masks.select(col("doc_id").as("db"), col("mask")), "mask")
-      .filter(col("da") < col("db"))
-      .select(col("da").as("d1"), col("db").as("d2"),
-        lit(1.0).cast("decimal(9,6)").cast("double").as("jac"))
-    inter.unionAll(intra)
   }
 
   /** The oracle-side clustering, shared VERBATIM by q78 and q133 so the two
@@ -412,12 +349,19 @@ object TextQueries {
       """.stripMargin.trim)),
 
     // ---- I3 (+ I2 scale shape): exact token-set Jaccard near-dup pairs.
-    // Docs collapse to distinct token-set bitmasks; pair enumeration runs
-    // over distinct sets only; popcount Jaccard; expand back to doc pairs.
+    // Docs collapse to distinct token sets with bitmasks; pair enumeration
+    // runs over distinct sets only; popcount Jaccard; expand back to doc
+    // pairs (q50's MinHash.setPairsToDocPairs, identical sets scored 1.0).
     // Exact — no LSH false negatives — yet never materializes doc×doc. ----
     QueryDef(
       "q33_neardup_pairs",
-      (s, dir) => exactNearDupPairs(s, dir).orderBy("d1", "d2"),
+      (s, dir) => {
+        def jac6(c: org.apache.spark.sql.Column) = c.cast("decimal(9,6)").cast("double")
+        val pairs = pairsCached(s, dir)
+          .select(col("r1"), col("r2"), jac6(col("inter") / col("uni")).as("jac"))
+        MinHash.setPairsToDocPairs(setsCached(s, dir), pairs, "jac", jac6(lit(1.0)))
+          .orderBy("d1", "d2")
+      },
       Some("""
         WITH t AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS toks
                    FROM documents)

@@ -127,6 +127,22 @@ class ComponentsSpec extends AnyFunSuite {
       s"persisted RDDs left behind: ${added.values.map(_.name)}")
   }
 
+  test("connected components: only the returned labels stay persisted") {
+    // Path 0-1-...-24 takes several label rounds, each of which checkpoints
+    // step1 and step; every superseded checkpoint must be released by the
+    // time the call returns, with no GC to help.
+    val verts = (0L until 25L).toDF("id")
+    val edges = (0L until 24L).map(i => (i, i + 1)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val labels = Components.connectedComponents(verts, edges)
+    val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+    assert(added.size == 1,
+      s"persisted RDDs left by the call: ${added.values.mkString(", ")}")
+    assert(labels.as[(Long, Long)].collect().toMap ==
+      (0L until 25L).map(_ -> 0L).toMap)
+  }
+
   test("adversarial shapes: long path, cycle, star, edge-free round-0 exit") {
     // Path 0-1-...-24: diameter 24 forces multiple certificate rounds and
     // real pointer-jump contraction (labels converge in O(log diameter)).

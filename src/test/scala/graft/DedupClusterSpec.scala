@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class DedupClusterSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  // A fresh session per call: the masks and pairs are memoized per session.
+  // A fresh session per call: the set relation and pairs are memoized per
+  // session.
   private def rel(dir: String): Seq[(Long, Long, Long)] = {
     import spark.implicits._
     graft.operators.TextQueries
@@ -30,8 +31,30 @@ class DedupClusterSpec extends AnyFunSuite {
     DriverPaths.bothAgree("sf0.01")(rel(TestSpark.sf0001.replace("sf0.001", "sf0.01")))
   }
 
+  test("a NULL-text document is its own size-1 cluster (q78, q133)") {
+    // The oracle's reach relation seeds every document, so a document with
+    // no tokens stays as a singleton; it must not vanish from the output.
+    val s = spark.newSession()
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-nulltext").toString
+    Seq[(Long, String)]((1L, "a b c"), (2L, "a b c"), (3L, null), (4L, "x y"))
+      .toDF("doc_id", "text")
+      .coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val (q78, q133) = DriverPaths.bothAgree("null text") {
+      val f = s.newSession()
+      (SparkEntry.queries("q78_dedup_clusters")(f, dir)
+        .as[(Long, Long, Long)].collect().toSeq,
+        SparkEntry.queries("q133_dedup_roi")(f, dir)
+          .as[(Long, Long, Long, Long, Long, Long)].collect().toSeq)
+    }
+    assert(q78 == Seq((1L, 1L, 2L), (2L, 1L, 2L), (3L, 3L, 1L), (4L, 4L, 1L)))
+    // (cluster_size, n_clusters, n_docs, docs_removable, tokens_total,
+    // tokens_removable): docs 3 and 4 are the two size-1 clusters.
+    assert(q133 == Seq((1L, 2L, 2L, 0L, 2L, 0L), (2L, 1L, 2L, 1L, 6L, 3L)))
+  }
+
   test("over-cap probe falls back to the distributed pipeline (cap=1)") {
-    // A budget of one (mask, srep) row < the fixture's distinct-set count:
+    // A budget of one (mask, rep) row < the fixture's distinct-set count:
     // the limit-probe must overflow, return None, and the distributed path
     // must produce the same relation as the driver path does.
     assert(DriverPaths.withBudget(64L)(rel(TestSpark.sf0001)) ==

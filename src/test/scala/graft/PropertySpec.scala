@@ -170,13 +170,14 @@ class PropertySpec extends AnyFunSuite {
 
   test("bitmask OR-fold equals the explode→row_number→sum formulation") {
     // Pins the round-9 bitmask rewrite (VERDICT r9 #2): the shared mask
-    // build behind three oracled queries (q33/q78/q133) replaced an
-    // explode → row_number window → broadcast join → groupBy SUM chain
-    // with sort_array(collect_set) + a per-doc OR-fold over
-    // array_position bits. Randomized corpora over a ≤64-word pool,
+    // build behind q33/q78/q133 and q50's confirm (MinHash.tokenMasks)
+    // replaced an explode → row_number window → broadcast join → groupBy
+    // SUM chain with a probed, byte-sorted vocabulary + a per-row OR-fold
+    // over array_position bits. Randomized corpora over a ≤64-word pool,
     // doc lengths 0..20 (empty docs included: BOTH paths must drop them —
-    // the old path had nothing to explode, the new path filters size > 0),
-    // asserted bit-for-bit per doc_id via a full outer join.
+    // the old path had nothing to explode, the new path filters size > 0
+    // as the q33/q78/q133 set relation does), asserted bit-for-bit per
+    // doc_id via a full outer join.
     val spark = TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -186,15 +187,11 @@ class PropertySpec extends AnyFunSuite {
     val docToks = rows.zipWithIndex
       .map { case (ts, i) => (i.toLong, ts) }.toDF("doc_id", "toks0")
       .select(col("doc_id"), array_distinct(col("toks0")).as("toks"))
-    // New path — mirrors TextQueries.docMasks exactly.
+    // New path — the one shared mask function, applied per document.
+    val masksNew = graft.functions.MinHash
+      .tokenMasks(docToks.filter(size(col("toks")) > 0)).get
+      .select("doc_id", "mask")
     val tok = docToks.select(col("doc_id"), explode(col("toks")).as("tok"))
-    val vocab = tok.agg(sort_array(collect_set(col("tok"))).as("vocab"))
-    val masksNew = docToks.filter(size(col("toks")) > 0)
-      .crossJoin(broadcast(vocab))
-      .select(col("doc_id"), expr(
-        "aggregate(toks, CAST(0 AS BIGINT), (acc, t) -> " +
-          "acc | shiftleft(CAST(1 AS BIGINT), " +
-          "CAST(array_position(vocab, t) AS INT) - 1))").as("mask"))
     // Old (rounds 1-8) path — the formulation the rewrite replaced.
     val w = org.apache.spark.sql.expressions.Window.orderBy(col("tok"))
     val vocabBits = tok.select("tok").distinct()

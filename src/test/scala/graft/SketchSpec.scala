@@ -137,6 +137,23 @@ class SketchSpec extends AnyFunSuite {
     assert(nFound / nExact >= 0.99, s"recall ${nFound / nExact}")
   }
 
+  test("q50 pairs are q33 pairs with the same jac, at a q33 recall >= 0.95 (sf0.01)") {
+    // q50 keeps jac >= 0.8 and q33 keeps jac > 0.8 (exact, all set pairs),
+    // so q50's pairs strictly above 0.8 must all be q33 pairs. Recall: 16
+    // bands × 6 rows gives P(candidate | J = 0.8) ≈ 0.992 per pair.
+    val dir = TestSpark.sf0001.replace("sf0.001", "sf0.01")
+    def pairs(q: String) =
+      Registry.queries(q)(spark, dir).as[(Long, Long, Double)].collect().toSet
+    val lsh = pairs("q50_minhash_lsh").filter(_._3 > 0.8)
+    val exact = pairs("q33_neardup_pairs")
+    assert(exact.nonEmpty)
+    val stray = lsh -- exact
+    assert(stray.isEmpty, s"${stray.size} q50 pairs are not q33 pairs: ${stray.take(5)}")
+    val recall = lsh.size.toDouble / exact.size
+    info(s"q33 recall of q50: ${lsh.size} / ${exact.size} = $recall")
+    assert(recall >= 0.95, s"recall $recall")
+  }
+
   test("I2 open-vocabulary branch: >64 distinct tokens takes the array-confirm path, same contract") {
     // The fixture corpus has a 31-word vocabulary, so every other test runs
     // the bitmask confirm branch. Build a deterministic 200-token-vocab
